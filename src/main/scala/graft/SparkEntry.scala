@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{AsOfJoin, BucketedJoin, GroupTopK, Profiling, RangeJoin, Relational, Sketches, Templates, TypedRows}
+import graft.operators.{AsOfJoin, BucketedJoin, GroupTopK, PartitionedLake, Profiling, RangeJoin, Relational, Sketches, Templates, TypedRows}
 import graft.pipeline.{Ann, Bpe, Clusters, Dedup, Multimodal, TextOps}
-import graft.sources.{ChangeFeed, GraftCatalog, GraftViews, IncrementalAgg, Matview, PartitionedLake, SnapshotsKeys}
+import graft.sources.{ChangeFeed, GraftCatalog, GraftViews, IncrementalAgg, Matview, SnapshotsKeys}
 import graft.streaming.{Cdc, EventStreams, GraftTableSink, JdbcReplicate, LakeMerge, Replicate}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */

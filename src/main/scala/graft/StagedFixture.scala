@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The staged-fixture protocol, in ONE place (r12 verdict #10): a stage
   * directory is trusted iff it carries a completion marker whose NAME
@@ -39,4 +39,11 @@ object StagedFixture {
       fs.create(marker, true).close()
     }
   }
+
+  /** Append `df` as plain parquet files to `dir`: an external producer's
+    * landing zone (the input an ingest key such as COPY INTO reads),
+    * never a lake table — lake tables stage only through the lake's
+    * write path.
+    */
+  def land(df: DataFrame, dir: String): Unit = df.write.mode("append").parquet(dir)
 }

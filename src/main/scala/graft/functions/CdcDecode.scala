@@ -1,6 +1,7 @@
 package graft.functions
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonFactoryBuilder, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpectsInputTypes
 import org.apache.spark.sql.GraftShim
@@ -29,13 +30,56 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - o_totalprice = e.after.o_totalprice
   *
   * Semantics match from_json's PERMISSIVE mode on this envelope shape:
-  * missing/null fields decode to null, a malformed document decodes to a
-  * NULL row (never an error), unknown fields are skipped, field order is
-  * irrelevant. CdcSpec pins the equivalence row-for-row against the
+  * missing/null fields decode to null, a mistyped scalar nulls only its
+  * own field (a non-string `op` decodes to its JSON text, as the builtin
+  * does), a malformed document decodes to a NULL row (never an error),
+  * unknown fields are skipped, field order is irrelevant, and a repeated
+  * key keeps its last value. CdcSpec pins the equivalence row-for-row against the
   * from_json form on the staged envelopes plus malformed/partial inputs.
   */
 object CdcDecodeKernel {
-  private val factory = new JsonFactory()
+  // from_json's JSONOptions defaults: single quotes, NaN/Infinity tokens
+  private val factory: JsonFactory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  // Field converters, per-field PERMISSIVE like the builtin on this Spark
+  // version: a mistyped value nulls only its own field.
+  private def skip(p: JsonParser, v: JsonToken): Unit =
+    if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
+
+  /** StringType: strings verbatim, any other non-null token as its JSON
+    * text (the builtin copies the structure through a generator too).
+    */
+  private def stringOf(p: JsonParser, v: JsonToken): UTF8String = v match {
+    case JsonToken.VALUE_NULL => null
+    case JsonToken.VALUE_STRING => UTF8String.fromString(p.getText)
+    case _ =>
+      val out = new java.io.ByteArrayOutputStream()
+      val g = factory.createGenerator(out, JsonEncoding.UTF8)
+      try g.copyCurrentStructure(p) finally g.close()
+      UTF8String.fromBytes(out.toByteArray)
+  }
+
+  /** LongType: integer tokens that fit a long; anything else is null. */
+  private def longOf(p: JsonParser, v: JsonToken): java.lang.Long =
+    if (v == JsonToken.VALUE_NUMBER_INT && p.getNumberType != JsonParser.NumberType.BIG_INTEGER)
+      java.lang.Long.valueOf(p.getLongValue)
+    else { skip(p, v); null }
+
+  /** DoubleType: number tokens and the builtin's non-finite strings. */
+  private def doubleOf(p: JsonParser, v: JsonToken): java.lang.Double = v match {
+    case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT =>
+      java.lang.Double.valueOf(p.getDoubleValue)
+    case JsonToken.VALUE_STRING => p.getText match {
+      case "NaN" => java.lang.Double.NaN
+      case "Infinity" | "+Infinity" | "+INF" => java.lang.Double.POSITIVE_INFINITY
+      case "-Infinity" | "-INF" => java.lang.Double.NEGATIVE_INFINITY
+      case _ => null
+    }
+    case _ => skip(p, v); null
+  }
 
   /** Parse `o_orderkey` (and optionally `o_totalprice`) out of a
     * before/after sub-object positioned AT its value token. Returns
@@ -52,15 +96,9 @@ object CdcDecodeKernel {
       val name = p.currentName()
       val v = p.nextToken()
       name match {
-        case "o_orderkey" =>
-          if (v == JsonToken.VALUE_NUMBER_INT) key = java.lang.Long.valueOf(p.getLongValue)
-          else if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
-        case "o_totalprice" if wantPrice =>
-          if (v == JsonToken.VALUE_NUMBER_FLOAT || v == JsonToken.VALUE_NUMBER_INT)
-            price = java.lang.Double.valueOf(p.getDoubleValue)
-          else if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
-        case _ =>
-          if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
+        case "o_orderkey" => key = longOf(p, v)
+        case "o_totalprice" if wantPrice => price = doubleOf(p, v)
+        case _ => skip(p, v)
       }
       tok = p.nextToken()
     }
@@ -86,20 +124,15 @@ object CdcDecodeKernel {
           val name = p.currentName()
           val v = p.nextToken()
           name match {
-            case "op" =>
-              if (v == JsonToken.VALUE_STRING) op = UTF8String.fromString(p.getText)
-              else if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
-            case "ts_ms" =>
-              if (v == JsonToken.VALUE_NUMBER_INT) tsMs = java.lang.Long.valueOf(p.getLongValue)
-              else if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
+            case "op" => op = stringOf(p, v)
+            case "ts_ms" => tsMs = longOf(p, v)
             case "before" =>
               val (k, _) = parseSide(p, wantPrice = false)
               beforeKey = k
             case "after" =>
               val (k, pr) = parseSide(p, wantPrice = true)
               afterKey = k; afterPrice = pr
-            case _ =>
-              if (v == JsonToken.START_OBJECT || v == JsonToken.START_ARRAY) p.skipChildren()
+            case _ => skip(p, v)
           }
           tok = p.nextToken()
         }

@@ -2,13 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Bucketing
 
 /** B22: zero-shuffle fact⋈fact join over bucketed staging tables.
   *
   * The flagship q03 shape joins orders⋈lineitem on orderkey with a
   * shuffle of both sides per query. Here the facts are staged ONCE as
-  * bucketed+sorted tables (sources/Bucketing.scala) and the same join
+  * bucketed+sorted tables (operators/Bucketing.scala) and the same join
   * runs with no Exchange at all — each task reads matching buckets of
   * both tables (SortMergeJoin over pre-sorted co-located buckets).
   * This is the layout you'd stage a 100 TB fact store in; PlanSpec

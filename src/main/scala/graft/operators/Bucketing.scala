@@ -1,4 +1,4 @@
-package graft.sources
+package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col

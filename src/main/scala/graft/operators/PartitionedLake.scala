@@ -1,4 +1,4 @@
-package graft.sources
+package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

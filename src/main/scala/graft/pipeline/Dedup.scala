@@ -446,16 +446,14 @@ object Dedup {
       .join(storePostings.toDF("h", "s_id"), Seq("h"))
       .select("b_id", "s_id").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // one aggregate over the materialized candidates: exact count (the
-    // broadcast-guard denominator) + approx distinct store ids (sizes
-    // the bloom AND the pruned-store estimate below). r13: the bloom's
+    // one aggregate over the materialized candidates: approx distinct
+    // store ids (sizes the bloom AND the pruned-store estimate below;
+    // the broadcast guard reads those estimates). r13: the bloom's
     // capacity is the DISTINCT store-id count, not the pair count — the
     // filter only ever holds s_id values, and the r12 pair-count sizing
     // built an ~88x oversized bitmap whose per-partition partials
     // dominated the build's merge (prof: 0.97 cpu-s single-task merge).
-    val candStats = cand.agg(count(lit(1)), approx_count_distinct(col("s_id"))).head()
-    val candN = candStats.getLong(0)
-    val candStoreIds = candStats.getLong(1)
+    val candStoreIds = cand.agg(approx_count_distinct(col("s_id"))).head().getLong(0)
     // fpp scales with the store: at fixed fpp=0.01 the pruned store is
     // true-matches + 1% OF THE FULL STORE — linear in store size, not
     // batch-bounded (the r12 advice finding). Target false positives

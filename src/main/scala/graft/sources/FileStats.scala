@@ -24,9 +24,12 @@ import org.apache.spark.sql.SparkSession
   * files whose [min,max] cannot match.
   *
   * Scale contract (100 TB): stats come from footers ALREADY WRITTEN by
-  * every parquet writer — harvesting reads O(files) footers (a few KB
-  * each), never data pages, and runs as a distributed Spark job over
-  * the file list (the Hadoop conf ships as serialized key/value pairs;
+  * every parquet writer — never data pages. Each lake write task reads
+  * back the footer of the file it just closed and reports the stats
+  * with the file ([[PartFileWriter]]), so a write costs no extra job;
+  * [[harvest]] (ANALYZE over files staged without stats) reads O(files)
+  * footers (a few KB each) as a distributed Spark job over the file
+  * list (the Hadoop conf ships as serialized key/value pairs;
   * `SerializableConfiguration` is private[spark]). Pruning is a
   * driver-side filter over the per-file stats (same cost class as
   * Spark's own partition pruning) that feeds the reader an explicit
@@ -99,12 +102,14 @@ object FileStats {
   // ---- footer harvest ----------------------------------------------------
 
   /** Read one footer and fold its row-group chunks into per-column
-    * (typ, min, max, nulls). Only long/double/string-comparable
-    * primitives participate — other physical types (INT96, FIXED_LEN
-    * decimals) are simply absent from the stats, which pruning treats
-    * as "cannot skip" (conservative, never wrong).
+    * (typ, min, max, nulls) for `cols` (empty = every column). Only
+    * long/double/string-comparable primitives participate — other
+    * physical types (INT96, FIXED_LEN decimals) are simply absent from
+    * the stats, which pruning treats as "cannot skip" (conservative,
+    * never wrong). Write tasks call it on the file they just closed;
+    * [[harvest]] calls it over a directory's existing files.
     */
-  private def footerStats(conf: Configuration, file: Path, cols: Set[String]): Map[String, ColStat] = {
+  private[sources] def footerStats(conf: Configuration, file: Path, cols: Set[String]): Map[String, ColStat] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try {
       val acc = scala.collection.mutable.Map.empty[String, ColStat]
@@ -228,23 +233,6 @@ object FileStats {
     }.collect().toMap // O(files × cols) stat tuples — manifest-sized, not data-sized
   }
 
-  /** Delete zero-row part files from `dir`. A filtered rewrite (e.g. a
-    * targeted delete) can leave an empty write partition behind as a
-    * rowless parquet file; its footer has no column chunks, so stats
-    * can never prune it and every later maintenance pass would re-touch
-    * it forever. One footer read per file, only over the just-rewritten
-    * dir — bounded work. Returns the number of files dropped.
-    */
-  def dropEmptyFiles(fs: FileSystem, dir: Path, conf: Configuration): Int = {
-    var n = 0
-    dataFiles(fs, dir).foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-      val rows = try reader.getRecordCount finally reader.close()
-      if (rows == 0L) { fs.delete(f.getPath, false); n += 1 }
-    }
-    n
-  }
-
   // ---- sidecar persistence ----------------------------------------------
 
   /** Sidecar format, one line per (file, column):
@@ -257,29 +245,31 @@ object FileStats {
         Seq(f, c, st.typ, st.nulls.toString, st.min.getOrElse("-"), st.max.getOrElse("-")).mkString("\t")
       }
     }.mkString("\n")
-    val out = fs.create(new Path(dir, SidecarName), true)
+    writeText(fs, new Path(dir, SidecarName), body)
+  }
+
+  private def writeText(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  def readSidecar(fs: FileSystem, dir: Path): Option[TableStats] = {
-    val p = new Path(dir, SidecarName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val parsed = body.linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(f, c, typ, nulls, mn, mx) = line.split("\t", 6)
-      (f, c, ColStat(typ, nulls.toLong, Some(mn).filter(_ != "-"), Some(mx).filter(_ != "-")))
-    }.toSeq
-    Some(parsed.groupBy(_._1).map { case (f, rows) =>
-      f -> rows.map(r => r._2 -> r._3).toMap
-    })
-  }
+  /** A sidecar's non-empty lines, None when it does not exist. */
+  private def readLines(fs: FileSystem, p: Path): Option[Seq[String]] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        .linesIterator.filter(_.nonEmpty).toSeq)
+      finally in.close()
+    }
+
+  def readSidecar(fs: FileSystem, dir: Path): Option[TableStats] =
+    readLines(fs, new Path(dir, SidecarName)).map { lines =>
+      lines.map { line =>
+        val Array(f, c, typ, nulls, mn, mx) = line.split("\t", 6)
+        (f, c, ColStat(typ, nulls.toLong, Some(mn).filter(_ != "-"), Some(mx).filter(_ != "-")))
+      }.groupBy(_._1).map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+    }
 
   // ---- pruning -----------------------------------------------------------
 
@@ -384,16 +374,17 @@ object FileStats {
     org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
 
   /** Build per-file blooms for `cols` over every data file under `dir`
-    * in ONE column-pruned pass. Filters are sized from the footer row
-    * counts (a distributed footer sweep — the same read [[harvest]]
-    * pays), so two partitions of the same file build mergeable
-    * (identical-geometry) filters. Only integral and string columns
-    * may be indexed — the probe and the build must hash identically,
-    * and Spark's sketch defines that contract for longs and UTF-8
-    * strings (integrals widen to long on both sides).
+    * in ONE column-pruned pass. Filters are sized from the caller's
+    * per-file row counts (`rows`: leaf name -> rows, which the write
+    * tasks or the caller's stats harvest already know), so two
+    * partitions of the same file build mergeable (identical-geometry)
+    * filters. Only integral and string columns may be indexed — the
+    * probe and the build must hash identically, and Spark's sketch
+    * defines that contract for longs and UTF-8 strings (integrals
+    * widen to long on both sides).
     */
   def harvestBlooms(s: SparkSession, dir: String, cols: Seq[String],
-                    fpp: Double = 0.01): TableBlooms = {
+                    rows: Map[String, Long], fpp: Double): TableBlooms = {
     require(cols.nonEmpty, "harvestBlooms needs at least one column")
     val hconf = s.sparkContext.hadoopConfiguration
     val fsys = new Path(dir).getFileSystem(hconf)
@@ -407,8 +398,6 @@ object FileStats {
     }
     // per-file row counts → expected insertions (geometry must agree
     // across partitions for mergeInPlace)
-    val rows: Map[String, Long] =
-      harvest(s, dir, Seq(RowsCol)).map { case (f, m) => f -> m(RowsCol).min.get.toLong }
     val rowsB = s.sparkContext.broadcast(rows)
     val colArr = cols.toArray
     import org.apache.spark.sql.functions.{col => fcol, input_file_name}
@@ -447,29 +436,16 @@ object FileStats {
         Seq(f, c, Base64.getEncoder.encodeToString(b)).mkString("\t")
       }
     }.mkString("\n")
-    val out = fs.create(new Path(dir, BloomSidecarName), true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeText(fs, new Path(dir, BloomSidecarName), body)
   }
 
-  def readBloomSidecar(fs: FileSystem, dir: Path): Option[TableBlooms] = {
-    val p = new Path(dir, BloomSidecarName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val parsed = body.linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(f, c, b) = line.split("\t", 3)
-      (f, c, Base64.getDecoder.decode(b))
-    }.toSeq
-    Some(parsed.groupBy(_._1).map { case (f, rows) =>
-      f -> rows.map(r => r._2 -> r._3).toMap
-    })
-  }
+  def readBloomSidecar(fs: FileSystem, dir: Path): Option[TableBlooms] =
+    readLines(fs, new Path(dir, BloomSidecarName)).map { lines =>
+      lines.map { line =>
+        val Array(f, c, b) = line.split("\t", 3)
+        (f, c, Base64.getDecoder.decode(b))
+      }.groupBy(_._1).map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+    }
 
   /** Normalize a probe value to the type the build-side `put` hashed:
     * integrals widen to Long (the sketch's own widening), strings pass

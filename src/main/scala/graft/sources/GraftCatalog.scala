@@ -1109,10 +1109,9 @@ object GraftCatalog {
     s.sql(s"CREATE NAMESPACE graft.$ns")
     s.sql(s"CREATE TABLE graft.$ns.orders_t (o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT)")
     def wave(pred: String): Unit =
-      s.sql(s"""SELECT o_orderkey, o_orderstatus,
+      graft.StagedFixture.land(s.sql(s"""SELECT o_orderkey, o_orderstatus,
                |       CAST(round(o_totalprice * 100, 0) AS BIGINT) AS price_cents
-               |FROM orders WHERE $pred""".stripMargin)
-        .write.mode("append").parquet(src)
+               |FROM orders WHERE $pred""".stripMargin), src)
     wave("o_orderkey % 2 = 0")
     s.sql(s"CALL graft.system.copy_into('$ns', 'orders_t', '$src')").collect()
     wave("o_orderkey % 2 <> 0")

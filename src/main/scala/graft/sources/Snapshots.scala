@@ -51,8 +51,9 @@ import org.apache.spark.sql.functions._
   *    application-level serialization.
   *
   * At 100 TB the manifest holds table→path pointers, so commit cost is
-  * O(1) in table size; data writes are normal partitioned/bucketed
-  * parquet jobs.
+  * O(1) in table size; every data write is one distributed parquet job
+  * through [[writeFiles]], whose tasks report each file's length, rows
+  * and footer stats.
   */
 class Snapshots(private[sources] val s: SparkSession,
                 private[sources] val root: String,
@@ -857,9 +858,10 @@ class Snapshots(private[sources] val s: SparkSession,
     (table + FilesSuffix) -> files.map { case (r, l) => s"$r:$l" }.mkString(";")
 
   /** Expand manifest parts to (relFile, length) by listing each DIR part
-    * once / stat-ing each file part — used on WRITE paths only, over
-    * directories the publish just produced (O(new files), amortized into
-    * the write), never per-read.
+    * once / stat-ing each file part — for parts the lake did not write
+    * itself (externally staged dirs, manifests from before `@files`
+    * lines), never per-read: lake writes know their files from
+    * [[writeFiles]].
     */
   private[sources] def listRelFiles(parts: Seq[String]): Seq[(String, Long)] =
     parts.flatMap { r =>
@@ -868,6 +870,63 @@ class Snapshots(private[sources] val s: SparkSession,
         FileStats.dataFiles(fs, p).map(f => s"$r/${f.getPath.getName}" -> f.getLen)
       else Seq(r -> fs.getFileStatus(p).getLen)
     }
+
+  /** THE lake's batch write path: every data and deletion-vector file
+    * the lake stages goes through here. `df`'s plan runs ONCE, as one
+    * job; each task writes its partition through [[PartFileWriter]] (the
+    * streaming sink's writer too) and returns its file's name, length,
+    * rows and `statsCols` footer stats. Then, on the driver: files in
+    * `rel` no task reported (failed attempts' residue) are deleted; if
+    * no task wrote a row, ONE rowless file keeps the schema; and the
+    * `_stats` / `_bloom` sidecars are written when `statsCols` /
+    * `bloomCols` are non-empty (blooms sized from the reported rows).
+    */
+  private[graft] def writeFiles(df: DataFrame, rel: String,
+                                statsCols: Seq[String] = Nil,
+                                bloomCols: Seq[String] = Nil,
+                                bloomFpp: Double = 0.01): WrittenDir = {
+    val dir = new Path(root, rel)
+    val spec = PartWriterSpec(s, dir.toString, df.schema,
+      if (statsCols.isEmpty) None else Some(statsCols.toSet))
+    val tasks = PartFileWriter.writeAll(df, spec)
+    sweepUnreported(dir, tasks.map(_.name).toSet)
+    val files =
+      if (tasks.nonEmpty) tasks
+      else new PartFileWriter(spec, 0, 0L).commit(keepEmpty = true).toSeq
+    if (statsCols.nonEmpty)
+      FileStats.writeSidecar(fs, dir, files.map(f => f.name -> f.stats).toMap)
+    if (bloomCols.nonEmpty)
+      FileStats.writeBloomSidecar(fs, dir, FileStats.harvestBlooms(s, dir.toString,
+        bloomCols, files.map(f => f.name -> f.rows).toMap, bloomFpp))
+    WrittenDir(rel, files)
+  }
+
+  /** Split manifest files (rel path, length) into those that might
+    * hold a row matching `ranges` and those their own directory's
+    * `_stats` sidecar proves cannot; a sidecar-less directory's files
+    * might match (conservative). One sidecar open per distinct dir.
+    */
+  private[sources] def splitByStats(files: Seq[(String, Long)], ranges: Seq[FileStats.ColRange])
+      : (Seq[(String, Long)], Seq[(String, Long)]) = {
+    val tagged = files.groupBy { case (r, _) => new Path(root, r).getParent }.toSeq
+      .flatMap { case (dir, fl) =>
+        val st = FileStats.readSidecar(fs, dir)
+        fl.map { case f @ (r, len) => f -> st.forall(stats => FileStats.prune(
+          Seq(new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, new Path(root, r))),
+          stats, ranges).nonEmpty) }
+      }
+    val (might, clean) = tagged.partition(_._2)
+    (might.map(_._1), clean.map(_._1))
+  }
+
+  /** Delete every entry of staging dir `dir` not named in `keep` — what
+    * failed task attempts or an earlier stage left there must never
+    * become visible.
+    */
+  private[sources] def sweepUnreported(dir: Path, keep: Set[String]): Unit =
+    if (fs.exists(dir))
+      fs.listStatus(dir).filterNot(st => keep(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, true))
 
   /** Footer-truth schema of a just-written table part: what a stock
     * parquet read would infer, recorded once at publish so reads never
@@ -951,18 +1010,11 @@ class Snapshots(private[sources] val s: SparkSession,
       case _ => s.read.parquet(absPaths(rel): _*)
     }))
 
-  /** Atomically commit a set of tables: write every DataFrame under
-    * the next version's directory, then publish the manifest. Returns
-    * the committed version. Retries the version claim on a concurrent
-    * commit (data is re-written under the bumped version — optimistic
-    * concurrency pays on conflict, not on the happy path).
-    *
-    * `statsCols` names columns whose per-file min/max should be
-    * harvested (from the parquet footers the write ALREADY produced —
-    * no data re-scan) into a `_stats` sidecar inside the table dir.
-    * The sidecar lands before the manifest publishes, so stats are
-    * covered by the same atomic commit; [[readWhere]] consults them
-    * for file skipping.
+  /** A manifest value is one or more ';'-joined RELATIVE paths, each a
+    * table directory or a single parquet file. File-granular entries
+    * are what lets [[deleteWhere]] re-reference untouched files from an
+    * older version (zero IO) instead of copying them; a plain commit
+    * writes the common 1-dir case.
     */
   private[sources] def splitRel(rel: String): Seq[String] = rel.split(";").toSeq
   private[sources] def absPaths(rel: String): Seq[String] = splitRel(rel).map(r => s"$root/$r")

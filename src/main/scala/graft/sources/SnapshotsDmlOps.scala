@@ -438,16 +438,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     require(names.distinct.size == names.size,
       s"table '$table' has duplicate part-file names — positional vectors need unique names")
     // stats classification: only might-match files are read for positions
-    val touch = files.groupBy { case (r, _) => new Path(root, r).getParent }
-      .toSeq.flatMap { case (dir, fl) =>
-        FileStats.readSidecar(fs, dir) match {
-          case None => fl
-          case Some(stats) => fl.filter { case (r, len) =>
-            FileStats.prune(Seq(new org.apache.hadoop.fs.FileStatus(
-              len, false, 1, 0L, 0L, new Path(root, r))), stats, ranges).nonEmpty
-          }
-        }
-      }
+    val touch = splitByStats(files, ranges)._1
     if (touch.isEmpty) return currentVersion.get
     val schema = storedSchema(headM, table).getOrElse(writtenSchema(baseRel))
     val touched = org.apache.spark.sql.GraftLakeShim.parquetByManifest(
@@ -472,7 +463,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
           throw new java.util.ConcurrentModificationException(
             s"$table re-pointed ${cur(table)} != $baseRel during MoR delete; re-run")
         val rel = stageRel(attempt, table + "__dv")
-        merged.coalesce(1).write.mode("overwrite").parquet(s"$root/$rel")
+        writeFiles(merged.coalesce(1), rel)
         if (writeManifest(attempt, cur + ((table + DvSuffix) -> rel))) return attempt
         attempt = math.max(attempt + 1, currentVersion.getOrElse(0L) + 1)
       }
@@ -519,16 +510,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     val names = files.map { case (r, _) => new Path(root, r).getName }
     require(names.distinct.size == names.size,
       s"table '$table' has duplicate part-file names — positional vectors need unique names")
-    val touch = files.groupBy { case (r, _) => new Path(root, r).getParent }
-      .toSeq.flatMap { case (dir, fl) =>
-        FileStats.readSidecar(fs, dir) match {
-          case None => fl
-          case Some(stats) => fl.filter { case (r, len) =>
-            FileStats.prune(Seq(new org.apache.hadoop.fs.FileStatus(
-              len, false, 1, 0L, 0L, new Path(root, r))), stats, ranges).nonEmpty
-          }
-        }
-      }
+    val touch = splitByStats(files, ranges)._1
     if (touch.isEmpty) return currentVersion.get
     val existing = headM.get(table + DvSuffix).map(rel =>
       s.read.parquet(absPaths(rel): _*)
@@ -570,15 +552,10 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
           throw new java.util.ConcurrentModificationException(
             s"$table re-pointed ${cur(table)} != $baseRel during MoR update; re-run")
         val dvRel = stageRel(attempt, table + "__dv")
-        mergedDv.coalesce(1).write.mode("overwrite").parquet(s"$root/$dvRel")
+        writeFiles(mergedDv.coalesce(1), dvRel)
         val newRel = stageRel(attempt, table)
-        newRows.write.mode("overwrite").parquet(s"$root/$newRel")
-        FileStats.dropEmptyFiles(fs, new Path(s"$root/$newRel"), s.sparkContext.hadoopConfiguration)
-        if (statsCols.nonEmpty)
-          FileStats.writeSidecar(fs, new Path(s"$root/$newRel"),
-            FileStats.harvest(s, s"$root/$newRel",
-              statsCols.map(c => physicalName(headM, table, c))))
-        val newFiles = files ++ listRelFiles(Seq(newRel))
+        val newFiles = files ++ writeFiles(newRows, newRel,
+          statsCols.map(c => physicalName(headM, table, c))).entries
         val lines = cur +
           (table -> s"${cur(table)};$newRel") +
           ((table + DvSuffix) -> dvRel) ++
@@ -831,7 +808,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     def phys(c: String): String = physByLogical.getOrElse(c, c)
     var attempt = currentVersion.getOrElse(0L) + 1
     var written: Option[String] = None // data written once; races re-merge the manifest only
-    var newFiles: Seq[(String, Long)] = Nil // the new dir's files, listed once post-write
+    var newFiles: Seq[(String, Long)] = Nil // the new dir's files, as the write reported them
     for (_ <- 1 to MaxAttempts) {
       val cur = currentVersion.map(readManifest).getOrElse(Map.empty[String, String])
       // consumed-tag check against manifest STATE (survives compact /
@@ -849,23 +826,9 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
         // (reads null there) — cluster on the present subset.
         val clusterPhys = clusterColsOf(headM0, table)
           .filter(df.columns.contains).map(phys)
-        clusterBatch(dfPhys, clusterPhys).write.mode("overwrite").parquet(s"$root/$r")
-        if (clusterPhys.nonEmpty) {
-          // range boundaries come from sampling — drop rowless parts,
-          // keeping one file as the schema carrier for an empty batch
-          FileStats.dropEmptyFiles(fs, new Path(s"$root/$r"), s.sparkContext.hadoopConfiguration)
-          if (FileStats.dataFiles(fs, new Path(s"$root/$r")).isEmpty)
-            dfPhys.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$root/$r")
-        }
-        val statsPhys = (statsCols.map(phys) ++ clusterPhys).distinct
-        if (statsPhys.nonEmpty)
-          FileStats.writeSidecar(fs, new Path(s"$root/$r"),
-            FileStats.harvest(s, s"$root/$r", statsPhys))
-        if (bloomCols.nonEmpty)
-          FileStats.writeBloomSidecar(fs, new Path(s"$root/$r"),
-            FileStats.harvestBlooms(s, s"$root/$r", bloomCols.map(phys)))
+        newFiles = writeFiles(clusterBatch(dfPhys, clusterPhys), r,
+          (statsCols.map(phys) ++ clusterPhys).distinct, bloomCols.map(phys)).entries
         written = Some(r)
-        newFiles = listRelFiles(Seq(r))
         r
       }
       val newRel = cur.get(table).fold(rel)(b => s"$b;$rel")
@@ -960,10 +923,10 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * streaming-direct-write contract:
     *
     *  - the data is ALREADY on disk (per-task direct parquet writes —
-    *    no second write, no shuffle); only `files` (the epoch's commit
-    *    messages: exact paths + lengths) are referenced, and stray
-    *    files in the staging dir from failed task attempts are deleted
-    *    here, before anything becomes visible;
+    *    no second write, no shuffle); only `written` (the epoch's
+    *    commit messages: names, lengths, rows, footer stats) are
+    *    referenced, and stray files in the staging dir from failed task
+    *    attempts are deleted here, before anything becomes visible;
     *  - the consumed-tag check makes a REPLAYED epoch (restart from
     *    checkpoint) a no-op that deletes its own fresh staging dir —
     *    the published one has a different run nonce;
@@ -977,7 +940,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     *    appendOnly tables accept (this IS an append).
     */
   private[graft] def publishStreamEpoch(table: String, stagingRel: String,
-                                        files: Seq[(String, Long)], tag: String,
+                                        written: Seq[WrittenFile], tag: String,
                                         writeSchema: org.apache.spark.sql.types.StructType): Long = {
     require(tag.matches("[A-Za-z0-9_-]+"), s"epoch tag '$tag' must be [A-Za-z0-9_-]+")
     def dropStaging(): Unit = {
@@ -987,7 +950,7 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     }
     val v0 = currentVersion.getOrElse(
       throw new IllegalStateException(s"no commits under $root — CREATE the table first"))
-    if (files.isEmpty) { dropStaging(); return v0 } // rowless epoch: nothing to publish
+    if (written.isEmpty) { dropStaging(); return v0 } // rowless epoch: nothing to publish
     val m0 = readManifest(v0)
     require(dataEntries(m0).contains(table),
       s"table '$table' not committed under $root — create it before streaming into it")
@@ -1006,11 +969,9 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
         s"${visible.simpleString}")
     // orphan sweep: failed task attempts may have left files the epoch's
     // commit messages do not name — they must never become visible
-    val keepNames = files.map { case (r, _) => new Path(r).getName }.toSet
+    val files = WrittenDir(stagingRel, written).entries
     val dir = new Path(s"$root/$stagingRel")
-    if (fs.exists(dir))
-      fs.listStatus(dir).filter(st => st.isFile && !keepNames(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, false))
+    sweepUnreported(dir, written.map(_.name).toSet)
     // write-time contracts over the staged bytes (zero-listing read)
     val staged = org.apache.spark.sql.GraftLakeShim.parquetByManifest(
       s, files.map { case (r, l) => (s"$root/$r", l) }, writeSchema)
@@ -1021,10 +982,14 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     // files keep file skipping alive — less tight than a clustered
     // batch, compact re-tightens), ALL eligible columns otherwise (so
     // metadata-only aggregates, which refuse on any sidecar-less file,
-    // survive writeStream.toTable). One footer sweep over files this
-    // writer just produced — no data IO.
-    val clusterPhys = clusterColsOf(m0, table) // colmap is identity here (guard above)
-    FileStats.writeSidecar(fs, dir, FileStats.harvest(s, s"$root/$stagingRel", clusterPhys))
+    // survive writeStream.toTable). The stats arrive in the epoch's
+    // commit messages, each task's read of the footer it just closed —
+    // no harvest job, no data IO.
+    val clusterPhys = clusterColsOf(m0, table).toSet // colmap is identity here (guard above)
+    FileStats.writeSidecar(fs, dir, written.map { f =>
+      f.name -> (if (clusterPhys.isEmpty) f.stats
+                 else f.stats.filter { case (c, _) => c == FileStats.RowsCol || clusterPhys(c) })
+    }.toMap)
     var attempt = v0 + 1
     for (_ <- 1 to MaxAttempts) {
       val cur = readManifest(currentVersion.get)
@@ -1193,20 +1158,11 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
         // non-empty here — the n == 0 early return above)
         val clusterPhys = clusterColsOf(cur, table)
           .filter(checked.columns.contains).map(c => physicalName(cur, table, c))
-        clusterBatch(phys, clusterPhys).write.mode("overwrite").parquet(s"$root/$r")
-        if (clusterPhys.nonEmpty)
-          FileStats.dropEmptyFiles(fs, new Path(s"$root/$r"), s.sparkContext.hadoopConfiguration)
-        val statsPhys =
-          (statsCols.map(c => physicalName(cur, table, c)) ++ clusterPhys).distinct
-        if (statsPhys.nonEmpty)
-          FileStats.writeSidecar(fs, new Path(s"$root/$r"),
-            FileStats.harvest(s, s"$root/$r", statsPhys))
-        if (bloomCols.nonEmpty)
-          FileStats.writeBloomSidecar(fs, new Path(s"$root/$r"),
-            FileStats.harvestBlooms(s, s"$root/$r", bloomCols.map(c => physicalName(cur, table, c))))
+        stagedFiles = writeFiles(clusterBatch(phys, clusterPhys), r,
+          (statsCols.map(c => physicalName(cur, table, c)) ++ clusterPhys).distinct,
+          bloomCols.map(c => physicalName(cur, table, c))).entries
         stagedHw = Some(hw)
         stagedRel = r
-        stagedFiles = listRelFiles(Seq(r))
       }
       val baseRel = dataEntries(cur).getOrElse(table,
         throw new NoSuchElementException(s"table '$table' not committed under $root"))
@@ -1273,41 +1229,12 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     val ranges = physicalRanges(headM, table, ranges0)
     val baseRel = dataEntries(headM).getOrElse(table,
       throw new NoSuchElementException(s"table '$table' not committed under $root"))
-    val touch = scala.collection.mutable.ArrayBuffer.empty[(String, Long)] // abs path, len
-    val keep = scala.collection.mutable.ArrayBuffer.empty[(String, Long)] // rel path, len
-    storedFiles(headM, table) match {
-      case Some(files) =>
-        // metadata-planned classification — same sidecar pruning as
-        // readWhere, candidate list from the manifest (no listing)
-        files.groupBy { case (r, _) => new Path(root, r).getParent }
-          .foreach { case (dir, fl) =>
-            val st = FileStats.readSidecar(fs, dir)
-            fl.foreach { case (r, len) =>
-              val might = st.forall(stats => FileStats.prune(
-                Seq(new org.apache.hadoop.fs.FileStatus(
-                  len, false, 1, 0L, 0L, new Path(root, r))),
-                stats, ranges).nonEmpty)
-              if (might) touch += (s"$root/$r" -> len) else keep += (r -> len)
-            }
-          }
-      case None =>
-        splitRel(baseRel).foreach { r =>
-          val p = new Path(root, r)
-          if (fs.getFileStatus(p).isDirectory) {
-            val st = FileStats.readSidecar(fs, p)
-            FileStats.dataFiles(fs, p).foreach { f =>
-              val might = st.forall(stats => FileStats.prune(Seq(f), stats, ranges).nonEmpty)
-              if (might) touch += (f.getPath.toString -> f.getLen)
-              else keep += (s"$r/${f.getPath.getName}" -> f.getLen)
-            }
-          } else {
-            val fst = fs.getFileStatus(p)
-            val might = FileStats.readSidecar(fs, p.getParent)
-              .forall(st => FileStats.prune(Seq(fst), st, ranges).nonEmpty)
-            if (might) touch += (p.toString -> fst.getLen) else keep += (r -> fst.getLen)
-          }
-        }
-    }
+    // classification against each dir's sidecar — the same pruning as
+    // readWhere, candidates from the manifest (a pre-metadata table
+    // lists its parts once)
+    val (might, keep) = splitByStats(
+      storedFiles(headM, table).getOrElse(listRelFiles(splitRel(baseRel))), ranges)
+    val touch = might.map { case (r, len) => (s"$root/$r", len) } // abs path, len
     // stats proving no file can match ends a delete/update here — but a
     // MERGE with an all-insert source still has rows to land, so its
     // rewrite runs over an EMPTY touched set (forceOnEmpty)
@@ -1421,31 +1348,21 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
         if (clusterPhys.isEmpty) rewrittenSized
         else if (what == "replace") clusterBatch(rewrittenPhys, clusterPhys)
         else rewrittenSized.sortWithinPartitions(clusterPhys.map(col): _*)
-      stagedOut.write.mode("overwrite").parquet(s"$root/$rel")
-      // an all-filtered write partition leaves a rowless file that stats
-      // could never prune — drop them so repeat passes converge
-      FileStats.dropEmptyFiles(fs, new Path(s"$root/$rel"), s.sparkContext.hadoopConfiguration)
-      val statsPhys =
-        (statsCols.map(c => physicalName(headM, table, c)) ++ clusterPhys).distinct
-      if (statsPhys.nonEmpty)
-        FileStats.writeSidecar(fs, new Path(s"$root/$rel"),
-          FileStats.harvest(s, s"$root/$rel", statsPhys))
-      // every touched row may have been filtered away: an entry pointing
-      // at a fileless dir is dead weight (and, with nothing else kept,
-      // an unreadable table) — omit it, or for a fully-emptied table
-      // keep ONE rowless file so the entry still carries the schema
-      val relHasData = FileStats.dataFiles(fs, new Path(s"$root/$rel")).nonEmpty
+      // empty write partitions leave no file (stats could never prune a
+      // rowless one, so repeat passes converge)
+      val written = writeFiles(stagedOut, rel,
+        (statsCols.map(c => physicalName(headM, table, c)) ++ clusterPhys).distinct)
+      // every touched row may have been filtered away: an entry for a
+      // rowless stage is dead weight — omit it, unless nothing else is
+      // kept: a fully-emptied table keeps the stage's one rowless file
+      // so the entry still carries the schema
       val parts =
-        if (relHasData) keepNow.map(_._1) :+ rel
-        else if (keepNow.nonEmpty) keepNow.map(_._1)
-        else {
-          rewrittenPhys.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$root/$rel")
-          Seq(rel)
-        }
+        if (written.rows > 0L || keepNow.isEmpty) keepNow.map(_._1) :+ rel
+        else keepNow.map(_._1)
       // refresh the read metadata: kept files keep their recorded (or
-      // just-statted) lengths, the new part is listed once while hot
+      // just-statted) lengths, the new part as the write reported it
       val newFiles =
-        if (parts.contains(rel)) keepNow ++ listRelFiles(Seq(rel))
+        if (parts.contains(rel)) keepNow ++ written.entries
         else keepNow
       val newSchema =
         if (parts.contains(rel)) {

@@ -27,18 +27,7 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
       .getOrElse(listRelFiles(splitRel(baseRel)))
     // classification identical to the DML engine's: stats decide which
     // files MIGHT hold matching rows; no sidecar → conservative touch
-    val touch = scala.collection.mutable.ArrayBuffer.empty[(String, Long)] // rel, len
-    val keep = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    files.groupBy { case (r, _) => new Path(root, r).getParent }
-      .foreach { case (dir, fl) =>
-        val st = FileStats.readSidecar(fs, dir)
-        fl.foreach { case (r, len) =>
-          val might = st.forall(stats => FileStats.prune(
-            Seq(new org.apache.hadoop.fs.FileStatus(
-              len, false, 1, 0L, 0L, new Path(root, r))), stats, ranges).nonEmpty)
-          if (might) touch += (r -> len) else keep += (r -> len)
-        }
-      }
+    val (touch, keep) = splitByStats(files, ranges)
     if (touch.size < 2) return currentVersion.get // nothing worth packing
     val touchedNames = touch.map { case (r, _) => new Path(root, r).getName }.toSet
     val n = math.max(1, math.ceil(touch.map(_._2).sum.toDouble / targetBytes).toInt)
@@ -47,7 +36,7 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
     // the PHYSICAL layout — a pending column mapping must survive, so
     // the new files keep physical names (only full compact materializes)
     val base0 = org.apache.spark.sql.GraftLakeShim.parquetByManifest(
-      s, touch.toSeq.map { case (r, len) => (s"$root/$r", len) }, schema)
+      s, touch.map { case (r, len) => (s"$root/$r", len) }, schema)
     val packed = applyDv(headM, table, base0).repartition(n)
     var attempt = currentVersion.getOrElse(0L) + 1
     for (_ <- 1 to MaxAttempts) {
@@ -56,17 +45,11 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
         throw new java.util.ConcurrentModificationException(
           s"$table re-pointed ${cur(table)} != $baseRel during compactWhere; re-run")
       val rel = stageRel(attempt, table)
-      packed.write.mode("overwrite").parquet(s"$root/$rel")
-      if (statsCols.nonEmpty)
-        FileStats.writeSidecar(fs, new Path(s"$root/$rel"),
-          FileStats.harvest(s, s"$root/$rel",
-            statsCols.map(c => physicalName(headM, table, c))))
-      if (bloomCols.nonEmpty)
-        FileStats.writeBloomSidecar(fs, new Path(s"$root/$rel"),
-          FileStats.harvestBlooms(s, s"$root/$rel",
-            bloomCols.map(c => physicalName(headM, table, c))))
-      val parts = keep.map(_._1).toSeq :+ rel
-      val newFiles = keep.toSeq ++ listRelFiles(Seq(rel))
+      val written = writeFiles(packed, rel,
+        statsCols.map(c => physicalName(headM, table, c)),
+        bloomCols.map(c => physicalName(headM, table, c)))
+      val parts = keep.map(_._1) :+ rel
+      val newFiles = keep ++ written.entries
       // TRIM the vector: entries naming rewritten files are stale (the
       // rows they hid are gone from the new files) and would overcount
       // metadata answers — keep only entries covering kept files
@@ -78,7 +61,7 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
           if (kept.isEmpty) Map.empty
           else {
             val newDvRel = stageRel(attempt, table + "__dv")
-            kept.coalesce(1).write.mode("overwrite").parquet(s"$root/$newDvRel")
+            writeFiles(kept.coalesce(1), newDvRel)
             Map((table + DvSuffix) -> newDvRel)
           }
       }
@@ -141,30 +124,16 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
         throw new java.util.ConcurrentModificationException(
           s"$table re-pointed ${cur(table)} != $baseRel during compaction; re-run")
       val rel = stageRel(attempt, table)
-      packed.write.mode("overwrite").parquet(s"$root/$rel")
-      // clustered table: range-partition sampling may leave rowless
-      // parts — drop them (keeping one schema carrier if the table is
-      // empty) and ALWAYS re-sidecar the cluster columns, since file
-      // pruning on the cluster key is the layout's whole point. Full
-      // compact materializes the column mapping, so cluster columns
-      // (logical names) ARE the new files' physical names — same reason
-      // statsCols are harvested raw here.
-      val clusterCols = clusterColsOf(headM, table)
-      if (clusterCols.nonEmpty) {
-        FileStats.dropEmptyFiles(fs, new Path(s"$root/$rel"), s.sparkContext.hadoopConfiguration)
-        if (FileStats.dataFiles(fs, new Path(s"$root/$rel")).isEmpty)
-          packed.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$root/$rel")
-      }
-      val statsAll = (statsCols ++ clusterCols).distinct
-      if (statsAll.nonEmpty)
-        FileStats.writeSidecar(fs, new Path(s"$root/$rel"),
-          FileStats.harvest(s, s"$root/$rel", statsAll))
-      if (bloomCols.nonEmpty)
-        FileStats.writeBloomSidecar(fs, new Path(s"$root/$rel"),
-          FileStats.harvestBlooms(s, s"$root/$rel", bloomCols))
+      // clustered table: ALWAYS re-sidecar the cluster columns, since
+      // file pruning on the cluster key is the layout's whole point.
+      // Full compact materializes the column mapping, so cluster
+      // columns (logical names) ARE the new files' physical names —
+      // same reason statsCols are used raw here.
+      val written = writeFiles(packed, rel,
+        (statsCols ++ clusterColsOf(headM, table)).distinct, bloomCols)
       val metaLines = Map(
         schemaLine(table, predictReadBack(packed.schema).getOrElse(writtenSchema(rel))),
-        filesLine(table, listRelFiles(Seq(rel))))
+        filesLine(table, written.entries))
       // rows invariant, files reorganized → dataChange=false for the
       // feed. A deletion vector is MATERIALIZED here: the compacted
       // rows were read DV-applied (readTable), so the line is dropped —

@@ -308,49 +308,6 @@ private[sources] trait SnapshotsMetaOps { self: Snapshots =>
     }
   }
 
-  /** Publish a new version whose table map is the current head's map
-    * with `updates` overlaid and `removes` dropped — data at `updates`'
-    * RELATIVE paths must already be fully written under `root`. This is
-    * the O(1)-publish half of a two-phase write: stage data anywhere
-    * under a version directory (invisible until published), then make
-    * it visible atomically. A partial-rewrite writer (CDC merge touching
-    * some buckets of a big table) pays data IO for what it changed and
-    * one manifest write — never a full-table rewrite.
-    *
-    * Same optimistic create-exclusive loop as [[commit]]; on a lost race
-    * the staged data is NOT rewritten — only the manifest merge re-runs
-    * against the new head.
-    */
-  /** ANALYZE — build missing `_stats` (and optionally `_bloom`)
-    * sidecars for a table's already-committed directories (the ANALYZE
-    * TABLE / OPTIMIZE-stats verb). Externally staged bytes
-    * ([[commitStaged]] — the streaming sink's publish path) arrive
-    * WITHOUT sidecars, so stats/bloom pruning cannot skip them until a
-    * compaction happens to rewrite them; this pays one column-pruned
-    * scan per un-analyzed directory instead of a full rewrite, closing
-    * the stats lifecycle for ingest-heavy tables. Sidecars are
-    * advisory accelerators (a dir without one reads conservatively —
-    * correct either way), so like the read-metadata cadence checkpoint
-    * this publishes NO version: rows are untouched, concurrent readers
-    * see either the conservative or the pruned plan, both exact.
-    * Directories that already carry a sidecar are left alone (their
-    * stats may cover other columns). Returns the number of
-    * directories analyzed.
-    */
-  private[sources] def pruneRelPath(rel: String, ranges: Seq[FileStats.ColRange]): Seq[String] = {
-    val p = new Path(root, rel)
-    if (fs.getFileStatus(p).isDirectory) {
-      val all = FileStats.dataFiles(fs, p)
-      FileStats.readSidecar(fs, p)
-        .map(st => FileStats.prune(all, st, ranges)).getOrElse(all)
-        .map(_.getPath.toString)
-    } else {
-      val keep = FileStats.readSidecar(fs, p.getParent)
-        .forall(st => FileStats.prune(Seq(fs.getFileStatus(p)), st, ranges).nonEmpty)
-      if (keep) Seq(p.toString) else Nil
-    }
-  }
-
   /** PLAN-TIME DATA SKIPPING for ordinary reads — the hook
     * [[org.apache.spark.sql.GraftLakeShim.parquetByManifest]] consults
     * at file-listing time with the scan's pushed data filters (so
@@ -425,24 +382,13 @@ private[sources] trait SnapshotsMetaOps { self: Snapshots =>
         // manifest, min/max from each directory's `_stats` sidecar (one
         // small OPEN per distinct dir — never a listing). Dirs without a
         // sidecar keep all their files (conservative, exact either way).
-        val kept = files.groupBy { case (r, _) => new Path(root, r).getParent }
-          .toSeq.flatMap { case (dir, fl) =>
-            FileStats.readSidecar(fs, dir) match {
-              case None => fl
-              case Some(stats) => fl.filter { case (r, len) =>
-                FileStats.prune(
-                  Seq(new org.apache.hadoop.fs.FileStatus(
-                    len, false, 1, 0L, 0L, new Path(root, r))),
-                  stats, ranges).nonEmpty
-              }
-            }
-          }
+        val kept = splitByStats(files, ranges)._1
         org.apache.spark.sql.GraftLakeShim.parquetByManifest(
           s, kept.map { case (r, len) => (s"$root/$r", len) }, schema)
       case _ =>
-        val kept = splitRel(rel).flatMap(r => pruneRelPath(r, ranges))
+        val kept = splitByStats(listRelFiles(splitRel(rel)), ranges)._1
         if (kept.isEmpty) s.read.parquet(absPaths(rel): _*).limit(0) // schema-only; zero data tasks
-        else s.read.parquet(kept: _*)
+        else s.read.parquet(kept.map { case (r, _) => s"$root/$r" }: _*)
     }
     toLogical(m, table, ranges.foldLeft(applyDv(m, table, base)) { (df, r) =>
       val c = col(r.col)

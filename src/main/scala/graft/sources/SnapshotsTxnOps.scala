@@ -14,6 +14,19 @@ import org.apache.spark.sql.functions._
   */
 private[sources] trait SnapshotsTxnOps { self: Snapshots =>
 
+  /** Atomically commit a set of tables: write every DataFrame under
+    * the next version's directory, then publish the manifest. Returns
+    * the committed version. Retries the version claim on a concurrent
+    * commit (data is re-written under the bumped version — optimistic
+    * concurrency pays on conflict, not on the happy path).
+    *
+    * `statsCols` names columns whose per-file min/max should be
+    * recorded (from the parquet footers the write ALREADY produced —
+    * no data re-scan) into a `_stats` sidecar inside the table dir.
+    * The sidecar lands before the manifest publishes, so stats are
+    * covered by the same atomic commit; [[readWhere]] consults them
+    * for file skipping.
+    */
   def commit(tables: Map[String, DataFrame],
              statsCols: Map[String, Seq[String]] = Map.empty,
              bloomCols: Map[String, Seq[String]] = Map.empty,
@@ -83,21 +96,14 @@ private[sources] trait SnapshotsTxnOps { self: Snapshots =>
     Await.result(Future.traverse(tables.toSeq) { case (name, df) =>
       Future {
         val rel = stageRel(attempt, name)
-        df.write.mode("overwrite").parquet(s"$root/$rel")
-        statsCols.get(name).filter(_.nonEmpty).foreach { cols =>
-          FileStats.writeSidecar(fs, new Path(s"$root/$rel"),
-            FileStats.harvest(s, s"$root/$rel", cols))
-        }
-        bloomCols.get(name).filter(_.nonEmpty).foreach { cols =>
-          FileStats.writeBloomSidecar(fs, new Path(s"$root/$rel"),
-            FileStats.harvestBlooms(s, s"$root/$rel", cols, bloomFpp))
-        }
-        // checkpoint the read metadata while the write's listing is
-        // hot: one listStatus (and at worst one footer) per table here
-        // buys zero listing / zero inference on EVERY future read
+        val written = writeFiles(df, rel, statsCols.getOrElse(name, Nil),
+          bloomCols.getOrElse(name, Nil), bloomFpp)
+        // checkpoint the read metadata from what the write reported (at
+        // worst one footer read for the schema): zero listing / zero
+        // inference on EVERY future read
         Seq(name -> rel,
           schemaLine(name, predictReadBack(df.schema).getOrElse(writtenSchema(rel))),
-          filesLine(name, listRelFiles(Seq(rel))))
+          filesLine(name, written.entries))
       }
     }, scala.concurrent.duration.Duration.Inf).flatten.toMap
   }
@@ -308,18 +314,7 @@ private[sources] trait SnapshotsTxnOps { self: Snapshots =>
         // the seeding batch honors the clusterBy contract exactly like
         // append: range-cluster + in-file sort, sidecar stats on the
         // cluster columns so the FIRST read after the replace prunes
-        clusterBatch(df, cluster).write.mode("overwrite").parquet(s"$root/$r")
-        if (cluster.nonEmpty) {
-          FileStats.dropEmptyFiles(fs, new Path(s"$root/$r"),
-            s.sparkContext.hadoopConfiguration)
-          if (FileStats.dataFiles(fs, new Path(s"$root/$r")).isEmpty)
-            df.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$root/$r")
-        }
-        val statsAll = (statsCols ++ cluster).distinct
-        if (statsAll.nonEmpty)
-          FileStats.writeSidecar(fs, new Path(s"$root/$r"),
-            FileStats.harvest(s, s"$root/$r", statsAll))
-        val fl = listRelFiles(Seq(r))
+        val fl = writeFiles(clusterBatch(df, cluster), r, (statsCols ++ cluster).distinct).entries
         written = Some((r, fl)); (r, fl)
       }
       val base = cur.filterNot { case (k, _) =>
@@ -386,20 +381,11 @@ private[sources] trait SnapshotsTxnOps { self: Snapshots =>
             val cluster = props.get(ClusterByProp).toSeq
               .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
             val r = stageRel(attempt, t)
-            clusterBatch(df, cluster).write.mode("overwrite").parquet(s"$root/$r")
-            if (cluster.nonEmpty) {
-              FileStats.dropEmptyFiles(fs, new Path(s"$root/$r"),
-                s.sparkContext.hadoopConfiguration)
-              if (FileStats.dataFiles(fs, new Path(s"$root/$r")).isEmpty)
-                df.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$root/$r")
-            }
-            val statsAll = (statsCols.getOrElse(t, Nil) ++ cluster).distinct
-            if (statsAll.nonEmpty)
-              FileStats.writeSidecar(fs, new Path(s"$root/$r"),
-                FileStats.harvest(s, s"$root/$r", statsAll))
+            val written = writeFiles(clusterBatch(df, cluster), r,
+              (statsCols.getOrElse(t, Nil) ++ cluster).distinct)
             Seq(t -> r,
               schemaLine(t, predictReadBack(df.schema).getOrElse(writtenSchema(r))),
-              filesLine(t, listRelFiles(Seq(r)))) ++
+              filesLine(t, written.entries)) ++
               (if (props.isEmpty) Nil
                else Seq((t + PropsSuffix) -> encodeChecks(props)))
           }
@@ -600,11 +586,21 @@ private[sources] trait SnapshotsTxnOps { self: Snapshots =>
       s"rollback lost $MaxAttempts consecutive version races under $root")
   }
 
-  /** A manifest value is one or more ';'-joined RELATIVE paths, each a
-    * table directory or a single parquet file. File-granular entries
-    * are what lets [[deleteWhere]] re-reference untouched files from an
-    * older version (zero IO) instead of copying them; a plain commit
-    * writes the common 1-dir case.
+  /** ANALYZE — build missing `_stats` (and optionally `_bloom`)
+    * sidecars for a table's already-committed directories (the ANALYZE
+    * TABLE / OPTIMIZE-stats verb). Externally staged bytes
+    * ([[commitStaged]]) arrive WITHOUT sidecars, so stats/bloom pruning
+    * cannot skip them until a compaction happens to rewrite them; this
+    * pays one column-pruned scan per un-analyzed directory instead of
+    * a full rewrite, closing
+    * the stats lifecycle for ingest-heavy tables. Sidecars are
+    * advisory accelerators (a dir without one reads conservatively —
+    * correct either way), so like the read-metadata cadence checkpoint
+    * this publishes NO version: rows are untouched, concurrent readers
+    * see either the conservative or the pruned plan, both exact.
+    * Directories that already carry a sidecar are left alone (their
+    * stats may cover other columns). Returns the number of
+    * directories analyzed.
     */
   def analyzeTable(table: String, statsCols: Seq[String],
                    bloomCols: Seq[String] = Nil,
@@ -628,16 +624,35 @@ private[sources] trait SnapshotsTxnOps { self: Snapshots =>
     dirs.foreach { d =>
       val needStats = statsCols.nonEmpty && FileStats.readSidecar(fs, d).isEmpty
       val needBloom = bloomCols.nonEmpty && FileStats.readBloomSidecar(fs, d).isEmpty
-      if (needStats)
-        FileStats.writeSidecar(fs, d, FileStats.harvest(s, d.toString, statsCols))
-      if (needBloom)
-        FileStats.writeBloomSidecar(fs, d,
-          FileStats.harvestBlooms(s, d.toString, bloomCols, bloomFpp))
-      if (needStats || needBloom) n += 1
+      // the one directory-wide footer harvest left: ANALYZE indexes
+      // files some earlier writer staged without the asked-for columns
+      // (its `_rows` also sizes the blooms)
+      if (needStats || needBloom) {
+        val stats = FileStats.harvest(s, d.toString,
+          if (needStats) statsCols else Seq(FileStats.RowsCol))
+        if (needStats) FileStats.writeSidecar(fs, d, stats)
+        if (needBloom)
+          FileStats.writeBloomSidecar(fs, d, FileStats.harvestBlooms(s, d.toString, bloomCols,
+            stats.map { case (f, m) => f -> m(FileStats.RowsCol).min.get.toLong }, bloomFpp))
+        n += 1
+      }
     }
     n
   }
 
+  /** Publish a new version whose table map is the current head's map
+    * with `updates` overlaid and `removes` dropped — data at `updates`'
+    * RELATIVE paths must already be fully written under `root`. This is
+    * the O(1)-publish half of a two-phase write: stage data anywhere
+    * under a version directory (invisible until published), then make
+    * it visible atomically. A partial-rewrite writer (CDC merge touching
+    * some buckets of a big table) pays data IO for what it changed and
+    * one manifest write — never a full-table rewrite.
+    *
+    * Same optimistic create-exclusive loop as [[commit]]; on a lost race
+    * the staged data is NOT rewritten — only the manifest merge re-runs
+    * against the new head.
+    */
   def commitStaged(updates: Map[String, String],
                    removes: Set[String] = Set.empty,
                    schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty): Long = {

@@ -16,12 +16,14 @@ import org.apache.spark.sql.types.StructType
   * Architecture (the Delta/Iceberg streaming-sink design, public):
   * every micro-batch is a DISTRIBUTED direct write — each task streams
   * its partition straight into a per-epoch staging directory through
-  * the engine's own parquet writer factory (identical bytes to
-  * `df.write.parquet`: same codec, same layout, same session confs;
-  * no foreachBatch re-shuffle, no driver-side rows) — followed by ONE
-  * driver-side manifest publish
-  * ([[graft.sources.SnapshotsDmlOps.publishStreamEpoch]]) that
-  * re-references the committed task files. Exactly-once rides the same
+  * the lake's per-task parquet writer ([[graft.sources.PartFileWriter]],
+  * the same body every batch lake write runs: identical bytes to
+  * `df.write.parquet`, same codec, same layout, same session confs; no
+  * foreachBatch re-shuffle, no driver-side rows) and reports its file's
+  * length, rows and footer stats — followed by ONE driver-side manifest
+  * publish ([[graft.sources.SnapshotsDmlOps.publishStreamEpoch]]) that
+  * re-references the committed task files and writes their `_stats`
+  * from the reports. Exactly-once rides the same
   * consumed-tag mechanism as every other ingest path: the tag is
   * `(streaming query id, epochId)` — the query id is stable across
   * restarts (it lives in the checkpoint), so a replayed epoch finds
@@ -40,21 +42,20 @@ class GraftStreamingWrite(val root: String, val table: String,
 
   private val spark = SparkSession.active
   private val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-  private val (factory, confSer) =
-    org.apache.spark.sql.GraftParquetWriteShim.writerSetup(spark, writeSchema)
+  // every eligible column's stats: the publish keeps the table's cluster
+  // columns when it declares some, all of them otherwise
+  private val spec = graft.sources.PartWriterSpec(spark, s"$root/stream-$nonce",
+    writeSchema, Some(Set.empty[String]))
 
   private def epochRel(epochId: Long) = s"stream-$nonce/e$epochId"
   private def tag(epochId: Long) =
     "st" + queryId.replaceAll("[^A-Za-z0-9]", "") + "-e" + epochId
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftStreamWriterFactory(root, s"stream-$nonce", writeSchema, factory, confSer)
+    GraftStreamWriterFactory(spec)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case m: GraftStreamCommitMessage if m.rows > 0L =>
-        (s"${epochRel(epochId)}/${m.fileName}", m.bytes)
-    }.toSeq
+    val files = messages.toSeq.collect { case GraftStreamCommitMessage(Some(f)) => f }
     new graft.sources.Snapshots(spark, root)
       .publishStreamEpoch(table, epochRel(epochId), files, tag(epochId), writeSchema)
     ()
@@ -179,61 +180,26 @@ object GraftTableSink {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
 }
 
-/** One committed task file of an epoch: leaf name + exact length (the
-  * length feeds the manifest's file metadata — reads plan without
-  * listing) + row count (rowless writers are skipped entirely).
+/** One task's report for an epoch: the file it wrote, None when its
+  * partition had no rows.
   */
-case class GraftStreamCommitMessage(fileName: String, bytes: Long, rows: Long)
+case class GraftStreamCommitMessage(file: Option[graft.sources.WrittenFile])
     extends WriterCommitMessage
 
-/** Per-task direct parquet writer. Files are attempt-unique
-  * (partitionId + taskId), opened LAZILY so empty partitions write no
-  * bytes at all; abort deletes the task's own file.
+/** Per-task writers for one query run; each epoch writes under its own
+  * `e<epochId>` directory of the run's staging dir.
   */
-case class GraftStreamWriterFactory(root: String, baseRel: String,
-                                    schema: StructType,
-                                    factory: java.io.Serializable,
-                                    conf: java.io.Serializable)
+case class GraftStreamWriterFactory(spec: graft.sources.PartWriterSpec)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val name = f"part-$partitionId%05d-$taskId.snappy.parquet"
-      private val path = s"$root/$baseRel/e$epochId/$name"
-      private var writer: org.apache.spark.sql.GraftRowFileWriter = _
-      private var rows = 0L
-
-      override def write(record: InternalRow): Unit = {
-        if (writer == null)
-          writer = org.apache.spark.sql.GraftParquetWriteShim.open(
-            factory, conf, path, schema, partitionId, taskId)
-        writer.write(record)
-        rows += 1
-      }
-
-      override def commit(): WriterCommitMessage = {
-        if (writer == null) return GraftStreamCommitMessage(name, 0L, 0L)
-        writer.close()
-        writer = null
-        val p = new Path(path)
-        val len = p.getFileSystem(
-          org.apache.spark.sql.GraftParquetWriteShim.hadoopConf(conf))
-          .getFileStatus(p).getLen
-        GraftStreamCommitMessage(name, len, rows)
-      }
-
-      override def abort(): Unit = {
-        if (writer != null) { try writer.close() catch { case _: Throwable => () } }
-        writer = null
-        val p = new Path(path)
-        val fs = p.getFileSystem(
-          org.apache.spark.sql.GraftParquetWriteShim.hadoopConf(conf))
-        if (fs.exists(p)) fs.delete(p, false)
-        ()
-      }
-
-      override def close(): Unit =
-        if (writer != null) { writer.close(); writer = null }
+      private val w = new graft.sources.PartFileWriter(
+        spec.copy(dir = s"${spec.dir}/e$epochId"), partitionId, taskId)
+      override def write(record: InternalRow): Unit = w.write(record)
+      override def commit(): WriterCommitMessage = GraftStreamCommitMessage(w.commit())
+      override def abort(): Unit = w.abort()
+      override def close(): Unit = w.close()
     }
 }

@@ -187,9 +187,11 @@ object GraftReadShim {
       fileSize = length)
 }
 
-/** Distributed parquet writing for the streaming table sink
-  * (`writeStream.toTable` on a graft lake table): per-task writers
-  * produce the SAME parquet bytes `df.write.parquet` would — the
+/** Distributed parquet writing for every lake write — the batch write
+  * seam (`Snapshots.writeFiles`) and the streaming table sink
+  * (`writeStream.toTable` on a graft lake table) share one per-task
+  * writer, `graft.sources.PartFileWriter`, built on this bridge. Per-task
+  * writers produce the SAME parquet bytes `df.write.parquet` would — the
   * engine's own `ParquetWriteSupport`/`ParquetUtils.prepareWrite`
   * factory (codec, timestamp/decimal layout, all session parquet
   * confs), obtained on the DRIVER and shipped serialized exactly as
@@ -200,6 +202,7 @@ object GraftParquetWriteShim {
   import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+  import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.execution.datasources.OutputWriterFactory
   import org.apache.spark.sql.types.StructType
 
@@ -220,25 +223,47 @@ object GraftParquetWriteShim {
     (factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
   }
 
-  /** Executor-side: open a parquet writer at the EXACT path. */
+  /** Open a parquet writer at `dir/stem` plus the factory's own file
+    * extension (codec-tagged, e.g. `.snappy.parquet`). Executor-side
+    * for task files, driver-side for a schema-carrier file.
+    */
   def open(factory: java.io.Serializable, conf: java.io.Serializable,
-           path: String, schema: StructType, partitionId: Int,
+           dir: String, stem: String, schema: StructType, partitionId: Int,
            taskId: Long): GraftRowFileWriter = {
     val f = factory.asInstanceOf[OutputWriterFactory]
     val ctx = new TaskAttemptContextImpl(new Configuration(hadoopConf(conf)),
-      new TaskAttemptID(new TaskID(new JobID("graftstream", 0), TaskType.MAP, partitionId),
+      new TaskAttemptID(new TaskID(new JobID("graftwrite", 0), TaskType.MAP, partitionId),
         (taskId % Int.MaxValue).toInt))
-    new GraftRowFileWriter(f.newInstance(path, schema, ctx))
+    new GraftRowFileWriter(f.newInstance(s"$dir/$stem${f.getFileExtension(ctx)}", schema, ctx))
   }
 
   /** Executor-side: the shipped Hadoop configuration. */
   def hadoopConf(conf: java.io.Serializable): Configuration =
     conf.asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
+
+  /** Run `df`'s plan ONCE, as one SQL execution (the final stage is one
+    * Spark job, exactly as a `df.write` would run it), handing each
+    * partition's rows to `task` with the partition index and task
+    * attempt id; returns the task results in partition order. The plan
+    * is re-planned from `df`'s analyzed plan per call, like every
+    * `df.write`, so a retried write re-runs rather than reuses it.
+    */
+  def runPartitions[T: scala.reflect.ClassTag](df: DataFrame)(
+      task: (Int, Long, Iterator[InternalRow]) => T): Array[T] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.sparkSession.sessionState.executePlan(ds.logicalPlan)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
+        Iterator.single(task(i, org.apache.spark.TaskContext.get.taskAttemptId, rows))
+      }.collect()
+    }
+  }
 }
 
 /** Thin public wrapper over the `private[sql]` OutputWriter. */
 final class GraftRowFileWriter private[sql](
     w: org.apache.spark.sql.execution.datasources.OutputWriter) {
+  def path: String = w.path
   def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit = w.write(row)
   def close(): Unit = w.close()
 }

@@ -939,7 +939,19 @@ class StreamingSpec extends AnyFunSuite {
       """not json at all""",
       """{"op":"r","ts_ms":""", // truncated
       """{}""",
-      null)
+      null,
+      // mistyped scalars: the builtin nulls only the mistyped field and
+      // reads a non-string op as its JSON text
+      """{"op":5,"ts_ms":7,"after":{"o_orderkey":1,"o_totalprice":5.0}}""",
+      """{"ts_ms":"x","op":"r","after":{"o_orderkey":1,"o_totalprice":5.0}}""",
+      """{"ts_ms":1.5,"op":"r","after":{"o_orderkey":1,"o_totalprice":5.0}}""",
+      """{"after":{"o_totalprice":"9"}}""",
+      """{"op":{"b":[1,"x",null],"a":1.0},"ts_ms":1e3}""",
+      """{"op":true,"ts_ms":9223372036854775808,"after":{"o_orderkey":99999999999999999999}}""",
+      """{"op":"r","ts_ms":3,"after":{"o_orderkey":1,"o_totalprice":NaN}}""",
+      """{"op":"r","after":{"o_orderkey":2,"o_totalprice":"-Infinity"}}""",
+      """{'op':'r','ts_ms':4,'after':{'o_orderkey':3}}""",
+      """{"op":"x","op":null,"ts_ms":3,"ts_ms":null}""")
     val edgeDf = edge.toDF("envelope")
     val a = Cdc.decode(edgeDf).collect()
     val b = Cdc.decodeFromJson(edgeDf).collect()

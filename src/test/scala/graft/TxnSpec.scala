@@ -1929,7 +1929,10 @@ class TxnSpec extends AnyFunSuite {
     import sp.implicits._
     val root = Files.createTempDirectory("txndet").toString + "/lake"
     val snap = new Snapshots(sp, root)
-    snap.commit(Map("a" -> Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v").repartition(2)),
+    // one row per partition: writes leave no rowless files, so a
+    // round-robin split that lands both rows together would stage one
+    snap.commit(Map("a" -> Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
+      .repartitionByRange(2, col("id"))),
       statsCols = Map("a" -> Seq("id")))
     snap.addCheck("a", "v_pos", "v > 0")
     snap.append("a", Seq((3L, 30.0)).toDF("id", "v"), tag = Some("b1"))
@@ -4416,4 +4419,131 @@ class TxnSpec extends AnyFunSuite {
     intercept[NoSuchElementException] { graft.sources.Matview.refresh(snap, "src") }
   }
 
+  // ---- the lake's one batch write path (Snapshots.writeFiles) ----------
+
+  private def hfs(dir: String) = new org.apache.hadoop.fs.Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every data part file of `dir` with its footer (schema, row count). */
+  private def footers(dir: String): Seq[(String, org.apache.parquet.schema.MessageType, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    FileStats.dataFiles(hfs(dir), new org.apache.hadoop.fs.Path(dir)).map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
+      try (st.getPath.getName, r.getFooter.getFileMetaData.getSchema, r.getRecordCount)
+      finally r.close()
+    }
+  }
+
+  test("write seam: parquet schema and rows identical to df.write.parquet") {
+    val base = Files.createTempDirectory("seamschema").toString
+    val frame = spark.range(0, 60, 1, 3).selectExpr(
+      "id",                                                     // non-nullable
+      "coalesce(id % 2 = 0, false) AS even",                    // non-nullable
+      "CAST(id * 1.25 AS DECIMAL(12,2)) AS price",              // decimal, p <= 18
+      "CAST(id * 1000000000000 AS DECIMAL(30,4)) AS big",       // decimal, p > 18
+      "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+      "IF(id % 5 = 0, NULL, concat('n', id)) AS name")
+    assert(!frame.schema("id").nullable && !frame.schema("even").nullable)
+    new Snapshots(spark, base).writeFiles(frame, "seam")
+    frame.write.parquet(s"$base/stock")
+    val seam = footers(s"$base/seam")
+    val stock = footers(s"$base/stock")
+    assert(seam.nonEmpty && stock.nonEmpty)
+    // names, physical + logical types and required/optional, per file
+    val want = stock.head._2
+    assert(want.toString.contains("required int64 id"), want.toString)
+    seam.foreach { case (f, sc, _) =>
+      assert(sc == want && sc.toString == want.toString, s"$f:\n$sc\nvs df.write:\n$want")
+    }
+    def rows(d: String) = spark.read.parquet(d).orderBy("id").collect().toSeq
+    assert(rows(s"$base/seam") == rows(s"$base/stock"))
+  }
+
+  test("write seam: the _stats sidecar equals a footer harvest of the same dir") {
+    val root = Files.createTempDirectory("seamstats").toString
+    val frame = spark.range(0, 200, 1, 4).selectExpr("id", "id * 0.5 AS v",
+      "concat('k', id) AS s", "CAST(NULL AS BIGINT) AS z", "CAST(id AS DECIMAL(10,2)) AS d")
+    val cols = Seq("id", "v", "s", "z", "d")
+    val written = new Snapshots(spark, root).writeFiles(frame, "stage/t", cols)
+    val dir = s"$root/stage/t"
+    val side = FileStats.readSidecar(hfs(dir), new org.apache.hadoop.fs.Path(dir)).get
+    assert(side == FileStats.harvest(spark, dir, cols))
+    assert(side.keySet == written.files.map(_.name).toSet && written.rows == 200L)
+    // the all-null column: recorded, no min/max, every row counted null
+    side.values.foreach { m =>
+      val z = m("z")
+      assert(z.min.isEmpty && z.max.isEmpty && z.nulls == m(FileStats.RowsCol).min.get.toLong, m)
+    }
+  }
+
+  test("write seam: empty partitions leave no file; an empty frame leaves one schema carrier") {
+    val root = Files.createTempDirectory("seamempty").toString
+    val snap = new Snapshots(spark, root)
+    // 8 range partitions of ~12 ids: only the first two hold ids < 20
+    val sparse = spark.range(0, 100, 1, 8).selectExpr("id", "concat('x', id) AS s")
+    val w1 = snap.writeFiles(sparse.where("id < 20"), "sparse")
+    val f1 = footers(s"$root/sparse")
+    assert(f1.size == 2 && f1.forall(_._3 > 0L) && f1.map(_._3).sum == 20L, f1.map(_._3))
+    assert(w1.files.map(_.name).toSet == f1.map(_._1).toSet)
+    val w2 = snap.writeFiles(sparse.where("id < 0"), "empty", Seq("id"))
+    val f2 = footers(s"$root/empty")
+    assert(f2.size == 1 && f2.head._3 == 0L, f2)
+    assert(w2.entries.map(_._1) == Seq(s"empty/${f2.head._1}"))
+    assert(spark.read.parquet(s"$root/empty").schema.fieldNames.toSeq == Seq("id", "s"))
+    assert(FileStats.readSidecar(hfs(root), new org.apache.hadoop.fs.Path(s"$root/empty")).get ==
+      FileStats.harvest(spark, s"$root/empty", Seq("id")))
+  }
+
+  test("write seam: a stray part file in the staging dir is deleted, never published") {
+    val root = Files.createTempDirectory("seamstray").toString
+    // a real parquet file, so a listing read would pick it up
+    spark.range(1000, 1005).write.parquet(s"$root/other")
+    val src = FileStats.dataFiles(hfs(root), new org.apache.hadoop.fs.Path(s"$root/other")).head.getPath
+    val stage = new org.apache.hadoop.fs.Path(s"$root/stage/t")
+    val stray = new org.apache.hadoop.fs.Path(stage, "part-00000-stray.snappy.parquet")
+    hfs(root).mkdirs(stage)
+    org.apache.hadoop.fs.FileUtil.copy(hfs(root), src, hfs(root), stray, false,
+      spark.sparkContext.hadoopConfiguration)
+    assert(hfs(root).exists(stray))
+    val written = new Snapshots(spark, root).writeFiles(spark.range(0, 10, 1, 2).toDF(), "stage/t")
+    assert(!hfs(root).exists(stray), "the stray survived the write")
+    assert(!written.entries.exists(_._1.contains("stray")))
+    assert(footers(stage.toString).map(_._1).toSet == written.files.map(_.name).toSet)
+    assert(spark.read.parquet(stage.toString).count() == 10L)
+  }
+
+  test("one lake write path: no parquet write in sources outside the seam, one footer harvest") {
+    val dir = new java.io.File("src/main/scala/graft/sources")
+    val files = dir.listFiles().filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    assert(files.length > 10, s"sources not found under ${dir.getAbsolutePath}")
+    def code(f: java.io.File): Seq[(String, Int)] = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().toSeq.zipWithIndex.filterNot { case (l, _) =>
+        val t = l.trim; t.startsWith("//") || t.startsWith("*") || t.startsWith("/**")
+      } finally src.close()
+    }
+    // a DataFrameWriter chain (JDBC egress is not a lake write)
+    val dfWriter = "\\.write\\s*(\\.(mode|format|parquet|partitionBy|bucketBy|sortBy|option|options|save|saveAsTable|insertInto)\\b|$)".r
+    val writes = for {
+      f <- files.toSeq; (l, i) <- code(f)
+      if dfWriter.findFirstIn(l).isDefined && !l.contains("format(\"jdbc\")")
+    } yield s"${f.getName}:${i + 1}: ${l.trim}"
+    assert(writes.isEmpty, "data writes outside Snapshots.writeFiles:\n" + writes.mkString("\n"))
+    val opens = for {
+      f <- files.toSeq if f.getName != "PartFiles.scala"; (l, i) <- code(f)
+      if l.contains("GraftParquetWriteShim.open")
+    } yield s"${f.getName}:${i + 1}"
+    assert(opens.isEmpty, s"parquet writers opened outside PartFileWriter: $opens")
+    // FileStats.harvest: its definition, and one caller — analyzeTable
+    val defLine = "^\\s*(private\\S*\\s+|override\\s+)*def\\s+(\\w+)".r
+    val harvests = for {
+      f <- files.toSeq
+      lines = code(f)
+      (l, i) <- lines if "\\bharvest\\(".r.findFirstIn(l).isDefined && !l.contains("def harvest(")
+    } yield lines.takeWhile(_._2 < i).reverse.collectFirst {
+      case (d, _) if defLine.findFirstMatchIn(d).isDefined => defLine.findFirstMatchIn(d).get.group(2)
+    }.getOrElse(s"${f.getName}:${i + 1}")
+    assert(harvests == Seq("analyzeTable"), harvests)
+  }
 }
