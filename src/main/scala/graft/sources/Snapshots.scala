@@ -299,7 +299,7 @@ class Snapshots(private[sources] val s: SparkSession,
     * Empty `@files` values (a zero-file line) pass through unexploded
     * so the key itself survives the round-trip. The rel-path half of
     * an exploded key is percent-encoded: hive-partitioned staging dirs
-    * put '=' INSIDE paths (`pk_bucket=28/…`), and a raw '=' in a key
+    * put '=' INSIDE paths (`region=eu/…`), and a raw '=' in a key
     * would split the `key=value` line at the wrong place.
     */
   private[sources] val PartMarker = "@part:"
@@ -1219,14 +1219,14 @@ object Snapshots {
   final class ConstraintViolationException(msg: String)
     extends RuntimeException(msg)
 
-  /** One table's operational facts at a version — see
-    * [[Snapshots.tableDetail]].
-    */
   /** What a [[Snapshots.vacuum]] with the same arguments would do. */
   final case class VacuumPlan(versionsToDrop: Seq[Long],
                               dirsToDelete: Seq[String],
                               bytesReclaimed: Long)
 
+  /** One table's operational facts at a version — see
+    * [[Snapshots.tableDetail]].
+    */
   final case class TableDetail(table: String, version: Long,
                                committedAt: java.sql.Timestamp,
                                numFiles: Int, sizeBytes: Long,

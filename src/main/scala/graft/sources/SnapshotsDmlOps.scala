@@ -22,26 +22,45 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * tight too. One extra shuffle per batch, paid at write time; every
     * read on a cluster-column predicate prunes files through the
     * existing sidecar stats with zero new read code. File count is
-    * pinned to the batch's incoming partition count — clustering
-    * redistributes, it does not fragment (the liquid-clustering answer
-    * to partitioning's small-file explosion).
+    * `files` when the caller sized the output, else the batch's
+    * incoming partition count — clustering redistributes, it does not
+    * fragment (the liquid-clustering answer to partitioning's
+    * small-file explosion).
     */
-  private[sources] def clusterBatch(df: DataFrame, clusterPhys: Seq[String]): DataFrame =
+  private[sources] def clusterBatch(df: DataFrame, clusterPhys: Seq[String],
+                                    files: Option[Int] = None): DataFrame =
     if (clusterPhys.isEmpty) df
     else {
       val cols = clusterPhys.map(col)
-      val n = math.max(1, df.rdd.getNumPartitions)
+      val n = files.getOrElse(math.max(1, df.rdd.getNumPartitions))
       df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
     }
 
+  /** Targeted row delete — the GDPR / retention maintenance job. Rows
+    * matching ALL `ranges` (conjunctive) are removed from the table in
+    * a new published version, at a cost of O(files that might hold a
+    * matching row), not O(table):
+    *
+    *  - files whose stats CANNOT contain a match are RE-REFERENCED in
+    *    the new manifest as file-granular entries — zero bytes read or
+    *    written for them;
+    *  - only might-match files are read, anti-filtered, and rewritten
+    *    (with a fresh `_stats` sidecar over `statsCols`).
+    *
+    * Old versions still read the deleted rows (time travel); the
+    * deleted bytes are reclaimed the same way the open table formats
+    * do it — a later [[compact]] collapses the file-granular entries
+    * into a fresh directory, after which [[vacuum]] can collect the
+    * old dirs. NULL values in a ranged column never match a range and
+    * are therefore always kept. Result-idempotent: a repeat of the same
+    * delete re-examines only files whose [min,max] still SPANS the
+    * range (min/max cannot prove a hole) and rewrites them to the same
+    * rows; a repeat where stats prove no match publishes nothing.
+    * Delegates to the general-predicate form with `pred = matchCond(ranges)`.
+    */
   def deleteWhere(table: String, ranges: Seq[FileStats.ColRange],
-                  statsCols: Seq[String] = Nil): Long = {
-    // doomed = every range matches; survivors = NOT doomed. coalesce
-    // pins the NULL case: a null in a ranged column never matches a
-    // range, so the row must SURVIVE (a bare negation would drop it).
-    partialRewrite(table, ranges, statsCols, "delete",
-      touched => touched.where(!coalesce(matchCond(ranges), lit(false))))
-  }
+                  statsCols: Seq[String] = Nil): Long =
+    deleteWhere(table, ranges, matchCond(ranges), statsCols)
 
   /** GENERAL-predicate DELETE — the split form the SQL front door
     * lowers to: `pruneRanges` is a conservative conjunctive
@@ -51,14 +70,17 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * while `pred` is the EXACT predicate applied to the touched rows.
     * Strict bounds, OR, IN, NOT, != — anything a deterministic row
     * expression can say — execute; the envelope only bounds how much
-    * gets rewritten, never what matches. Three-valued edge pinned as
-    * in the ranged form: a NULL predicate keeps the row.
+    * gets rewritten, never what matches. Three-valued edge: a NULL
+    * predicate keeps the row (coalesce pins it — a bare negation
+    * would drop it).
     */
   def deleteWhere(table: String, pruneRanges: Seq[FileStats.ColRange],
                   pred: org.apache.spark.sql.Column,
-                  statsCols: Seq[String]): Long =
+                  statsCols: Seq[String]): Long = {
+    require(pruneRanges.nonEmpty, "deleteWhere requires at least one range")
     partialRewrite(table, pruneRanges, statsCols, "delete",
       touched => touched.where(!coalesce(pred, lit(false))))
+  }
 
   /** Targeted row UPDATE — same stats-pruned partial-rewrite machinery
     * as [[deleteWhere]]: untouched files re-referenced (zero IO), only
@@ -67,27 +89,13 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * null in a ranged column never matches, so the row passes through
     * unchanged). Together commit/merge (INSERT/UPSERT), deleteWhere and
     * updateWhere cover the reference users' DML surface
-    * (`execute`, Stream.hs:122-145) against the lake.
+    * (`execute`, Stream.hs:122-145) against the lake. Delegates to the
+    * general-predicate form with `pred = matchCond(ranges)`.
     */
   def updateWhere(table: String, ranges: Seq[FileStats.ColRange],
                   sets: Map[String, org.apache.spark.sql.Column],
-                  statsCols: Seq[String] = Nil): Long = {
-    require(sets.nonEmpty, "updateWhere requires at least one SET column")
-    // a generated column cannot be SET directly (its derivation owns
-    // it — update its inputs; the rewrite recomputes it): Delta's rule
-    currentVersion.map(readManifest).foreach { m =>
-      val gen = decodeChecks(m.get(table + GenSuffix)).keySet
-      val hit = sets.keySet.intersect(gen)
-      require(hit.isEmpty,
-        s"cannot SET generated column(s) ${hit.mkString(", ")} of table '$table'")
-    }
-    partialRewrite(table, ranges, statsCols, "update", { touched =>
-      val hit = coalesce(matchCond(ranges), lit(false))
-      sets.foldLeft(touched) { case (df, (c, e)) =>
-        df.withColumn(c, when(hit, e).otherwise(col(c)))
-      }
-    })
-  }
+                  statsCols: Seq[String] = Nil): Long =
+    updateWhere(table, ranges, matchCond(ranges), sets, statsCols)
 
   /** GENERAL-predicate UPDATE — the [[deleteWhere]] split applied to
     * the update rewrite: envelope for pruning, exact `pred` deciding
@@ -98,7 +106,10 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
                   pred: org.apache.spark.sql.Column,
                   sets: Map[String, org.apache.spark.sql.Column],
                   statsCols: Seq[String]): Long = {
+    require(pruneRanges.nonEmpty, "updateWhere requires at least one range")
     require(sets.nonEmpty, "updateWhere requires at least one SET column")
+    // a generated column cannot be SET directly (its derivation owns
+    // it — update its inputs; the rewrite recomputes it): Delta's rule
     currentVersion.map(readManifest).foreach { m =>
       val gen = decodeChecks(m.get(table + GenSuffix)).keySet
       val hit = sets.keySet.intersect(gen)
@@ -147,94 +158,30 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * [[append]] (INSERT), [[deleteWhere]] (DELETE) and [[updateWhere]]
     * (UPDATE): source rows whose key matches an existing row REPLACE it,
     * the rest are inserted, all in one atomic publish (the reference's
-    * users run exactly this upsert through `execute`, Stream.hs:122-145;
-    * the streaming latest-wins form is LakeMerge).
-    *
-    * Scale shape: one scalar agg over the batch-sized source yields its
-    * key span, and the same stats-pruned partial-rewrite engine as
-    * deleteWhere bounds the touched file set to files whose key range
-    * overlaps it — every source key lies inside the span, so a pruned
-    * file PROVABLY holds no match and the matched/unmatched split is
-    * globally correct from the touched files alone. The rewrite is ONE
-    * full-outer join of the touched rows with the source (full outer
-    * cannot broadcast, but both sides are bounded: touched files +
-    * batch), so cost is O(touched + batch), never O(table). With an
-    * all-insert source whose span overlaps nothing, every file is
-    * re-referenced and the source lands as a fresh part (forceOnEmpty).
+    * users run exactly this upsert through `execute`, Stream.hs:122-145).
+    * It is [[applyChanges]] with no dead keys: one scalar job for the
+    * source's leading-key span, one full-outer join over the touched
+    * files and the source, O(touched + batch), never O(table). An
+    * all-insert source whose span overlaps nothing re-references every
+    * file and lands as a fresh part.
     *
     * Contract: `source` must be unique on `keyCol` (a duplicated key
-    * would multiply its matched row — dedupe upstream, latest-wins, as
-    * LakeMerge does); null-keyed source rows can never match and insert
-    * as-is. Schema must match the table exactly (evolve via
-    * [[append]]'s mergeSchema first).
+    * would multiply its matched row — dedupe upstream, latest-wins, or
+    * use [[mergeClauses]], which refuses duplicates); null-keyed source
+    * rows can never match and insert as-is. Schema must match the
+    * table exactly (evolve via [[append]]'s mergeSchema first).
     */
   def mergeInto(table: String, source: DataFrame, keyCol: String,
                 statsCols: Seq[String] = Nil): Long =
     mergeInto(table, source, Seq(keyCol), statsCols)
 
-  /** Composite-key MERGE: same engine, the match is on ALL `keyCols`
-    * (real tables carry composite primary keys). Touched-file pruning
-    * uses the LEADING key column's span — the index-prefix rule: stats
-    * on the leading component bound the candidate set, the remaining
-    * components resolve inside the join. Every source key's leading
-    * component lies inside that span, so a pruned file provably holds
-    * no match and the split stays globally correct.
+  /** Composite-key MERGE: the match is on ALL `keyCols`; pruning uses
+    * the LEADING key column's span (the index-prefix rule, see
+    * [[applyChanges]]).
     */
-  def mergeInto(table: String, source0: DataFrame, keyCols: Seq[String],
-                statsCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "mergeInto requires at least one key column")
-    val headM = readManifest(currentVersion.getOrElse(
-      throw new IllegalStateException(s"no commits under $root")))
-    // refuse UP FRONT, not inside partialRewrite: the all-null-leading-
-    // key edge below lands as an append and would otherwise let MERGE
-    // on a guarded table succeed or refuse depending on source DATA —
-    // Delta's delta.appendOnly blocks MERGE unconditionally
-    requireNotAppendOnly(headM, table, "MERGE")
-    val baseRel = dataEntries(headM).getOrElse(table,
-      throw new NoSuchElementException(s"table '$table' not committed under $root"))
-    // generated columns: an omitting source is completed, a providing
-    // source is validated — before the schema signature check
-    val source = applyGenerated(table, headM, source0, "merge")
-    // the source speaks the VISIBLE (logical) schema; the rewrite runs
-    // in logical space and partialRewrite stages it back physically
-    val existing = logicalSchema(headM, table).getOrElse(writtenSchema(baseRel))
-    def sig(st: org.apache.spark.sql.types.StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
-      st.fields.map(f => (f.name, f.dataType)).toSeq
-    require(sig(source.schema) == sig(existing),
-      s"merge source schema ${source.schema.simpleString} != table '$table' schema ${existing.simpleString}")
-    keyCols.foreach(k => require(existing.fieldNames.contains(k),
-      s"merge key '$k' not a column of table '$table'"))
-    val cols = existing.fieldNames.toSeq
-    val rest = cols.filterNot(keyCols.contains)
-    require(cols.forall(!_.startsWith("_mrg_")),
-      s"table '$table' columns collide with merge's reserved '_mrg_' prefix")
-    // the source's own leading-key span (two scalars to the driver —
-    // the source is the batch side by definition) bounds the touched set
-    val lead = keyCols.head
-    val mm = source.agg(min(col(lead)), max(col(lead)), count(lit(1))).head()
-    if (mm.getLong(2) == 0L) return currentVersion.get // empty source: no-op
-    if (mm.isNullAt(0))
-      // non-empty source whose EVERY leading key is null: a null key
-      // component never matches (SQL MERGE ON semantics), so the whole
-      // source inserts and no existing file can be touched — land it as
-      // an O(batch) append rather than silently dropping it as "empty"
-      return append(table, source, statsCols = statsCols)
-    val span = FileStats.ColRange(lead, Some(mm.get(0)), Some(mm.get(1)))
-    partialRewrite(table, Seq(span), statsCols, "merge", { touched =>
-      val srcR = source.select(
-        keyCols.map(k => col(k).as(s"_mrg_key_$k")) ++
-          (lit(true).as("_mrg_hit") +: rest.map(c => col(c).as(s"_mrg_$c"))): _*)
-      // SQL MERGE `ON` semantics: plain equality, a NULL key component
-      // never matches (null-keyed source rows land as inserts)
-      val cond = keyCols.map(k => col(k) === col(s"_mrg_key_$k")).reduce(_ && _)
-      touched.join(srcR, cond, "full_outer")
-        .select(cols.map { c =>
-          if (keyCols.contains(c)) coalesce(col(c), col(s"_mrg_key_$c")).as(c)
-          else when(coalesce(col("_mrg_hit"), lit(false)), col(s"_mrg_$c"))
-            .otherwise(col(c)).as(c)
-        }: _*)
-    }, forceOnEmpty = true)
-  }
+  def mergeInto(table: String, source: DataFrame, keyCols: Seq[String],
+                statsCols: Seq[String]): Long =
+    applyChanges(table, Some(source), None, keyCols, statsCols)
 
   /** MERGE with the FULL ANSI/Delta clause matrix — ordered conditional
     * WHEN MATCHED UPDATE/DELETE arms, ordered conditional WHEN NOT
@@ -401,26 +348,21 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     }, forceOnEmpty = notMatched.nonEmpty && nSrc > 0L)
   }
 
-  /** METADATA-ONLY aggregates (Iceberg's metadata-only queries, public
-    * knowledge): answer count(*) / count(col) / min(col) / max(col)
-    * from the `_stats` sidecars alone — ZERO data files opened, zero
-    * Spark jobs; cost is O(manifest + sidecars) on the driver however
-    * many terabytes the table holds. The sidecar's `_rows` pseudo-
-    * column (harvested from the same footer read every stats publish
-    * already pays) supplies row counts; per-column null counts turn
-    * them into exact count(col). Exactness is REFUSED loudly rather
-    * than approximated: any file missing from its sidecar, any
-    * requested column missing stats, or any unset footer null count
-    * (nulls = −1) throws — stats are an accelerator that must never
-    * silently change an answer. Caveats inherited from parquet
-    * footers: string min/max are exact only when the writer did not
-    * truncate them (Spark leaves short strings untruncated), and
-    * double NaN handling follows the footer contract — both fine for
-    * the key's integer/short-string columns. Returns (total rows,
-    * col -> (nonnull count, min, max)); min/max are None for all-null
-    * columns. Merge-on-read tables answer count(*) exactly (footer
-    * rows minus tombstoned positions, O(DV) extra); per-column
-    * questions on them are refused until compact materializes.
+  /** MERGE-ON-READ delete (deletion vectors — the Delta/Iceberg v2
+    * fast-delete path): rows matching ALL `ranges` are tombstoned by
+    * POSITION (file_name, row_index) in a `@dv` sidecar table instead
+    * of rewriting any data file. Cost: read only might-match files
+    * (same stats classification as [[deleteWhere]]), write O(matched
+    * rows) of positions, publish one manifest — at 100 TB a
+    * single-row GDPR delete costs kilobytes instead of re-writing a
+    * gigabyte file. Every read applies the vector transparently;
+    * [[compact]] later materializes it (copy-on-write) and drops the
+    * line. Result-idempotent: a repeat whose tombstones are already
+    * all present publishes nothing. The vector merges with any
+    * existing one, so MoR deletes stack. Positions key on file_name —
+    * verified UNIQUE across the table's files before publishing (every
+    * write path produces uuid'd part names; the check makes the
+    * assumption loud, not silent).
     */
   def deleteWhereMoR(table: String, ranges0: Seq[FileStats.ColRange]): Long = {
     require(ranges0.nonEmpty, "deleteWhereMoR requires at least one range")
@@ -571,14 +513,13 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
   /** Keyset DELETE — `DELETE WHERE keyCol IN (<batch>)`, the
     * tombstone-apply verb every CDC consumer needs (c06's ranged
     * deleteWhere covers retention sweeps; replication and
-    * right-to-erasure arrive as key SETS). Same engine and cost model
-    * as [[mergeInto]]: the batch-sized keyset's span (two scalars)
-    * bounds the touched-file set through the stats sidecar, untouched
-    * files are re-referenced byte-for-byte, and the touched rows pass
-    * through one broadcast-sized left_anti join — O(touched + batch),
-    * never O(table). Naturally idempotent: re-deleting absent keys
-    * rewrites nothing new (rowless outputs are dropped), so replays
-    * converge. Stats proving no overlap → true no-op.
+    * right-to-erasure arrive as key SETS). It is [[applyChanges]] with
+    * no source: the keyset's span (one scalar job) bounds the touched
+    * files, untouched files are re-referenced byte-for-byte, and the
+    * touched rows pass through one broadcast left_anti join —
+    * O(touched + batch), never O(table). Naturally idempotent:
+    * re-deleting absent keys rewrites nothing new, so replays converge.
+    * Stats proving no overlap, or an empty keyset → true no-op.
     */
   def deleteKeys(table: String, keys: DataFrame, keyCol: String,
                  statsCols: Seq[String] = Nil): Long =
@@ -589,28 +530,8 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * the anti-join matches on every component.
     */
   def deleteKeys(table: String, keys: DataFrame, keyCols: Seq[String],
-                 statsCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "deleteKeys requires at least one key column")
-    val headM = readManifest(currentVersion.getOrElse(
-      throw new IllegalStateException(s"no commits under $root")))
-    // uniform refusal (see mergeInto): an empty keyset short-circuits
-    // below and must not make DELETE on a guarded table data-dependent
-    requireNotAppendOnly(headM, table, "keyset DELETE")
-    val baseRel = dataEntries(headM).getOrElse(table,
-      throw new NoSuchElementException(s"table '$table' not committed under $root"))
-    val existing = logicalSchema(headM, table).getOrElse(writtenSchema(baseRel))
-    keyCols.foreach(k => require(existing.fieldNames.contains(k),
-      s"delete key '$k' not a column of table '$table'"))
-    val ks = keys.select(keyCols.map(k => col(k).as(s"_del_$k")): _*).distinct()
-    val lead = keyCols.head
-    val mm = ks.agg(min(col(s"_del_$lead")), max(col(s"_del_$lead"))).head()
-    if (mm.isNullAt(0)) return currentVersion.get // empty keyset: no-op
-    val span = FileStats.ColRange(lead, Some(mm.get(0)), Some(mm.get(1)))
-    partialRewrite(table, Seq(span), statsCols, "deleteKeys", { touched =>
-      val cond = keyCols.map(k => col(k) === col(s"_del_$k")).reduce(_ && _)
-      touched.join(broadcast(ks), cond, "left_anti")
-    })
-  }
+                 statsCols: Seq[String]): Long =
+    applyChanges(table, None, Some(keys), keyCols, statsCols)
 
   /** CDC APPLY — one atomic verb for a whole change batch: upsert
     * `source` rows on `keyCols` AND delete `deadKeys`, in ONE
@@ -623,47 +544,75 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     * mid-batch reader can no longer observe the upserted-but-not-yet-
     * deleted intermediate state.
     *
-    * Cost model: the combined leading-key span of both sides bounds
-    * the touched files (every upsert key and every dead key lies
-    * inside it, so a pruned file provably holds no match of either
-    * kind and pass-through is globally correct); the rewrite is
-    * mergeInto's one full-outer join followed by deleteKeys' one
-    * broadcast anti-join over the touched rows — O(touched + batch).
+    * Cost model: ONE scalar job over both sides' leading keys yields
+    * their combined span, which bounds the touched files (every upsert
+    * key and every dead key lies inside it, so a pruned file provably
+    * holds no match of either kind and pass-through is globally
+    * correct). With composite keys the span is the LEADING column's —
+    * the index-prefix rule: stats on the leading component bound the
+    * candidate set, the remaining components resolve inside the join.
+    * The rewrite is one full-outer join of the touched rows with the
+    * source followed by one broadcast anti-join with the dead keys —
+    * O(touched + batch).
+    *
     * Semantics: upserts apply first, then deletes — a key in both
     * ends DEAD (tombstone wins, matching CDC per-key last-state
-    * resolution). A non-empty source whose every leading key is null
-    * lands as an insert-only append (mergeInto's rule) before the
-    * deletes apply. Schema guard, generated columns and CHECK
-    * constraints are mergeInto's.
+    * resolution). SQL MERGE `ON` semantics: plain equality, a NULL key
+    * component never matches. A non-empty source whose every leading
+    * key is null therefore lands as an insert-only O(batch) append
+    * before the deletes apply. Generated columns: an omitting source is
+    * completed, a providing source is validated; the rewrite recomputes
+    * them and CHECK constraints gate it — skipped for a pure delete,
+    * which only drops rows. appendOnly refuses the verb up front,
+    * whatever internal path the data would select (Delta's rule).
     */
   def applyChanges(table: String, source: DataFrame, deadKeys: DataFrame,
-                   keyCols: Seq[String], statsCols: Seq[String] = Nil): Long = {
-    require(keyCols.nonEmpty, "applyChanges requires at least one key column")
+                   keyCols: Seq[String], statsCols: Seq[String] = Nil): Long =
+    applyChanges(table, Some(source), Some(deadKeys), keyCols, statsCols)
+
+  /** The one keyed-upsert body behind [[applyChanges]], [[mergeInto]]
+    * (no dead keys) and [[deleteKeys]] (no source): an absent side adds
+    * no union branch to the span job and no join to the rewrite.
+    */
+  private def applyChanges(table: String, source: Option[DataFrame],
+                           deadKeys: Option[DataFrame],
+                           keyCols: Seq[String], statsCols: Seq[String]): Long = {
+    val verb =
+      if (deadKeys.isEmpty) "MERGE"
+      else if (source.isEmpty) "keyset DELETE"
+      else "CDC apply (merge+delete)"
+    require(keyCols.nonEmpty, s"$verb requires at least one key column")
     val headM = readManifest(currentVersion.getOrElse(
       throw new IllegalStateException(s"no commits under $root")))
-    // same up-front refusal as mergeInto: the verb must refuse on a
-    // guarded table REGARDLESS of which internal path the data selects
-    requireNotAppendOnly(headM, table, "CDC apply (merge+delete)")
+    // refuse UP FRONT, not inside partialRewrite: the all-null-leading-
+    // key edge lands as an append and an empty side short-circuits, so
+    // the refusal must not depend on the batch's DATA
+    requireNotAppendOnly(headM, table, verb)
     val baseRel = dataEntries(headM).getOrElse(table,
       throw new NoSuchElementException(s"table '$table' not committed under $root"))
-    val src = applyGenerated(table, headM, source, "merge")
+    // the source speaks the VISIBLE (logical) schema; the rewrite runs
+    // in logical space and partialRewrite stages it back physically
     val existing = logicalSchema(headM, table).getOrElse(writtenSchema(baseRel))
     def sig(st: org.apache.spark.sql.types.StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
       st.fields.map(f => (f.name, f.dataType)).toSeq
-    require(sig(src.schema) == sig(existing),
-      s"applyChanges source schema ${src.schema.simpleString} != table '$table' schema ${existing.simpleString}")
-    keyCols.foreach(k => require(existing.fieldNames.contains(k),
-      s"key '$k' not a column of table '$table'"))
     val cols = existing.fieldNames.toSeq
+    keyCols.foreach(k => require(cols.contains(k), s"key '$k' not a column of table '$table'"))
+    val src = source.map { s0 =>
+      val s1 = applyGenerated(table, headM, s0, "merge")
+      require(sig(s1.schema) == sig(existing),
+        s"$verb source schema ${s1.schema.simpleString} != table '$table' schema ${existing.simpleString}")
+      require(cols.forall(!_.startsWith("_mrg_")),
+        s"table '$table' columns collide with merge's reserved '_mrg_' prefix")
+      s1
+    }
     val rest = cols.filterNot(keyCols.contains)
-    require(cols.forall(!_.startsWith("_mrg_")),
-      s"table '$table' columns collide with merge's reserved '_mrg_' prefix")
     val lead = keyCols.head
-    val ks = deadKeys.select(keyCols.map(k => col(k).as(s"_del_$k")): _*).distinct()
+    val ks = deadKeys.map(_.select(keyCols.map(k => col(k).as(s"_del_$k")): _*).distinct())
     // ONE scalar job over the union of both sides' leading keys yields
     // the combined span plus per-side emptiness facts
-    val tagged = src.select(col(lead).as("_k"), lit(1).as("_side"))
-      .unionByName(ks.select(col(s"_del_$lead").as("_k"), lit(2).as("_side")))
+    val tagged = (src.map(_.select(col(lead).as("_k"), lit(1).as("_side"))) ++
+      ks.map(_.select(col(s"_del_$lead").as("_k"), lit(2).as("_side"))))
+      .reduce(_ unionByName _)
     val r = tagged.agg(min(col("_k")), max(col("_k")),
       sum(when(col("_side") === 1, 1L).otherwise(0L)),
       sum(when(col("_side") === 1 && col("_k").isNotNull, 1L).otherwise(0L)),
@@ -672,31 +621,28 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
     val (nUps, nUpsLead, nDead) = (cnt(2), cnt(3), cnt(4))
     if (nUps == 0L && nDead == 0L) return currentVersion.get
     if (nUps > 0L && nUpsLead == 0L) {
-      // degenerate: every upsert's leading key is null — insert-as-is
-      // (mergeInto's rule), then apply the deletes; two versions for
-      // this edge, one for the common path
-      append(table, source, statsCols = statsCols)
-      return if (nDead > 0L) deleteKeys(table, ks.toDF(keyCols: _*), keyCols, statsCols)
+      // degenerate: every upsert's leading key is null — insert-as-is,
+      // then apply the deletes; two versions for this edge, one for
+      // the common path
+      append(table, source.get, statsCols = statsCols)
+      return if (nDead > 0L) deleteKeys(table, ks.get.toDF(keyCols: _*), keyCols, statsCols)
       else currentVersion.get
     }
     val span = FileStats.ColRange(lead, Some(r.get(0)), Some(r.get(1)))
-    partialRewrite(table, Seq(span), statsCols, "merge", { touched =>
-      val merged =
-        if (nUps == 0L) touched
-        else {
-          val srcR = src.select(
-            keyCols.map(k => col(k).as(s"_mrg_key_$k")) ++
-              (lit(true).as("_mrg_hit") +: rest.map(c => col(c).as(s"_mrg_$c"))): _*)
-          val cond = keyCols.map(k => col(k) === col(s"_mrg_key_$k")).reduce(_ && _)
-          touched.join(srcR, cond, "full_outer")
-            .select(cols.map { c =>
-              if (keyCols.contains(c)) coalesce(col(c), col(s"_mrg_key_$c")).as(c)
-              else when(coalesce(col("_mrg_hit"), lit(false)), col(s"_mrg_$c"))
-                .otherwise(col(c)).as(c)
-            }: _*)
-        }
-      if (nDead == 0L) merged
-      else {
+    partialRewrite(table, Seq(span), statsCols, if (nUps > 0L) "merge" else "deleteKeys", { touched =>
+      val merged = src.filter(_ => nUps > 0L).fold(touched) { src =>
+        val srcR = src.select(
+          keyCols.map(k => col(k).as(s"_mrg_key_$k")) ++
+            (lit(true).as("_mrg_hit") +: rest.map(c => col(c).as(s"_mrg_$c"))): _*)
+        val cond = keyCols.map(k => col(k) === col(s"_mrg_key_$k")).reduce(_ && _)
+        touched.join(srcR, cond, "full_outer")
+          .select(cols.map { c =>
+            if (keyCols.contains(c)) coalesce(col(c), col(s"_mrg_key_$c")).as(c)
+            else when(coalesce(col("_mrg_hit"), lit(false)), col(s"_mrg_$c"))
+              .otherwise(col(c)).as(c)
+          }: _*)
+      }
+      ks.filter(_ => nDead > 0L).fold(merged) { ks =>
         val dcond = keyCols.map(k => col(k) === col(s"_del_$k")).reduce(_ && _)
         merged.join(broadcast(ks), dcond, "left_anti")
       }
@@ -1195,6 +1141,8 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
 
   /** Conjunction of inclusive ranges as a Column (null where any ranged
     * column is null — callers coalesce to pin the three-valued edge).
+    * No ranges is `true`; the verbs refuse an empty range list
+    * themselves, with their own message.
     */
   private[sources] def matchCond(ranges: Seq[FileStats.ColRange]): org.apache.spark.sql.Column =
     ranges.map { r =>
@@ -1203,19 +1151,25 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
       // a fully-unbounded range matches every row — same semantics
       // readWhere gives it (no filter), instead of an empty.reduce throw
       if (conds.isEmpty) lit(true) else conds.reduce(_ && _)
-    }.reduce(_ && _)
+    }.reduceOption(_ && _).getOrElse(lit(true))
 
-  /** Shared engine of [[deleteWhere]]/[[updateWhere]]: classify the
-    * table's files by whether their stats admit a row matching ALL
-    * `ranges`, re-reference the provably-clean ones, run `rewrite` over
-    * the rest, publish. Returns the new version (or the current one
-    * when stats prove no file can match — a true no-op).
+  /** The copy-on-write engine under every row-level verb —
+    * [[deleteWhere]], [[updateWhere]], [[replaceWhere]], [[mergeClauses]]
+    * and the keyed [[applyChanges]] body (so [[mergeInto]] and
+    * [[deleteKeys]]): classify the table's files by whether their stats
+    * admit a row matching ALL `ranges`, re-reference the provably-clean
+    * ones, run `rewrite` over the rest, publish. `what` is the verb
+    * family ("delete", "update", "replace", "merge", "deleteKeys"); the
+    * generated-column/CHECK passes, the output clustering, the publish
+    * seam and the errors all key off it. Callers refuse an empty
+    * `ranges` themselves, under their own verb name. Returns the new
+    * version (or the current one when stats prove no file can match —
+    * a true no-op).
     */
   private[sources] def partialRewrite(table: String, ranges0: Seq[FileStats.ColRange],
                              statsCols: Seq[String], what: String,
                              rewrite: DataFrame => DataFrame,
                              forceOnEmpty: Boolean = false): Long = {
-    require(ranges0.nonEmpty, s"${what}Where requires at least one range")
     require(!isMetaEntry(table),
       s"table name '$table' collides with the reserved '@' manifest lines")
     val headM = readManifest(currentVersion
@@ -1321,7 +1275,13 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
       // batch with arbitrary distribution, so it pays the same one
       // range shuffle append pays — INSERT OVERWRITE into a clustered
       // table comes out clustered, not "clustered after the next
-      // compact". The sidecar always re-covers the cluster columns.
+      // compact". A MERGE's output leaves its join hash-partitioned:
+      // coalesced into several files, each file would span the whole
+      // touched key range and every later merge would touch them all,
+      // so a merge sized to more than one file range-clusters into
+      // exactly that many key-disjoint files (one file is sorted in
+      // place, no shuffle). The sidecar always re-covers the cluster
+      // columns.
       val clusterPhys = clusterColsOf(headM, table)
         .filter(rewritten.columns.contains).map(c => physicalName(headM, table, c))
       // OUTPUT FILE SIZING (guide §6): the rewrite output otherwise
@@ -1340,13 +1300,14 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
       val targetFileBytes = s.conf.getOption("spark.graft.write.targetFileBytes")
         .map(_.toLong).getOrElse(128L << 20)
       val touchedBytes = touch.map(_._2).sum
-      val rewrittenSized =
-        if (touch.isEmpty) rewrittenPhys
-        else rewrittenPhys.coalesce(
-          ((touchedBytes + targetFileBytes - 1) / targetFileBytes).max(1L).min(1 << 20).toInt)
+      val nFiles =
+        if (touch.isEmpty) None
+        else Some(((touchedBytes + targetFileBytes - 1) / targetFileBytes).max(1L).min(1 << 20).toInt)
+      val rewrittenSized = nFiles.fold(rewrittenPhys)(rewrittenPhys.coalesce)
       val stagedOut =
         if (clusterPhys.isEmpty) rewrittenSized
         else if (what == "replace") clusterBatch(rewrittenPhys, clusterPhys)
+        else if (what == "merge" && nFiles.exists(_ > 1)) clusterBatch(rewrittenPhys, clusterPhys, nFiles)
         else rewrittenSized.sortWithinPartitions(clusterPhys.map(col): _*)
       // empty write partitions leave no file (stats could never prune a
       // rowless one, so repeat passes converge)
@@ -1380,51 +1341,6 @@ private[sources] trait SnapshotsDmlOps { self: Snapshots =>
       attempt = math.max(attempt + 1, currentVersion.getOrElse(0L) + 1)
     }
     throw new IllegalStateException(
-      s"${what}Where lost $MaxAttempts consecutive version races under $root")
+      s"$what lost $MaxAttempts consecutive version races under $root")
   }
-
-  /** Bin-pack a table's current files into ~`targetBytes` files and
-    * publish the result as a NEW version (other tables re-pointed
-    * unchanged — O(1) manifest work). Small-file compaction is the
-    * standing maintenance job of any streamed-into lake: merge commits
-    * and micro-batch sinks accrete small files, and at 100 TB a
-    * scan's task count (and the namenode's file count) follows file
-    * count, not byte count.
-    *
-    * `sortCol` additionally range-clusters rows across the rewritten
-    * files, re-sharpening the `_stats` sidecar (harvested fresh from
-    * the new footers) so post-compaction [[readWhere]] skipping is
-    * maximal on THAT column. `zorderCols` (numeric; overrides sortCol)
-    * interleave-clusters on SEVERAL columns at once: each column is
-    * bucketed by its own approximate quantile boundaries (one
-    * approxQuantile pass — a bounded boundary array to the driver, not
-    * data), the bucket ids' bits are interleaved into a Z-value, and
-    * files are range-packed by it. A space-filling curve keeps rows
-    * close in EVERY dimension close in the file order, so a range on
-    * any single Z-column still skips most files — the property a plain
-    * sort gives only its leading column. (The publicly documented
-    * Delta/Iceberg OPTIMIZE ZORDER idea, original code.)
-    *
-    * Concurrency: if another writer re-points `table` between our read
-    * and publish, the compacted data is stale — that attempt fails
-    * loudly (caller re-runs) instead of silently dropping the race
-    * winner's rows. Races on OTHER tables merge fine: each publish
-    * attempt re-reads the current manifest.
-    */
-  /** PARTIAL compaction — OPTIMIZE with a predicate (the Delta
-    * `OPTIMIZE WHERE` shape, public design). At 100 TB a table-wide
-    * [[compact]] is not an operation you run; the affordable form
-    * bin-packs only the files whose stats overlap `ranges` (where the
-    * small-file churn actually lands — the hot ingest partition) and
-    * re-references everything else untouched: cost is O(matching
-    * files), the version is `@maint` (rows invariant — the feed skips
-    * it), and stats/blooms re-sharpen exactly where the rewrite
-    * happened. A deletion vector is TRIMMED, not materialized: the
-    * touched files' tombstoned rows drop out of the rewrite and their
-    * (now stale) vector entries are removed, while entries covering
-    * kept files stay live — count(*) metadata answers remain exact.
-    * A column mapping is KEPT (the kept files still carry old physical
-    * names; only the table-wide [[compact]] may materialize). No-op
-    * (current version) when fewer than two files match.
-    */
 }

@@ -13,6 +13,22 @@ import org.apache.spark.sql.functions._
   */
 private[sources] trait SnapshotsMaintOps { self: Snapshots =>
 
+  /** PARTIAL compaction — OPTIMIZE with a predicate (the Delta
+    * `OPTIMIZE WHERE` shape, public design). At 100 TB a table-wide
+    * [[compact]] is not an operation you run; the affordable form
+    * bin-packs only the files whose stats overlap `ranges` (where the
+    * small-file churn actually lands — the hot ingest partition) and
+    * re-references everything else untouched: cost is O(matching
+    * files), the version is `@maint` (rows invariant — the feed skips
+    * it), and stats/blooms re-sharpen exactly where the rewrite
+    * happened. A deletion vector is TRIMMED, not materialized: the
+    * touched files' tombstoned rows drop out of the rewrite and their
+    * (now stale) vector entries are removed, while entries covering
+    * kept files stay live — count(*) metadata answers remain exact.
+    * A column mapping is KEPT (the kept files still carry old physical
+    * names; only the table-wide [[compact]] may materialize). No-op
+    * (current version) when fewer than two files match.
+    */
   def compactWhere(table: String, ranges0: Seq[FileStats.ColRange],
                    targetBytes: Long = 128L << 20,
                    statsCols: Seq[String] = Nil,
@@ -78,6 +94,34 @@ private[sources] trait SnapshotsMaintOps { self: Snapshots =>
       s"compactWhere lost $MaxAttempts consecutive version races under $root")
   }
 
+  /** Bin-pack a table's current files into ~`targetBytes` files and
+    * publish the result as a NEW version (other tables re-pointed
+    * unchanged — O(1) manifest work). Small-file compaction is the
+    * standing maintenance job of any streamed-into lake: merge commits
+    * and micro-batch sinks accrete small files, and at 100 TB a
+    * scan's task count (and the namenode's file count) follows file
+    * count, not byte count.
+    *
+    * `sortCol` additionally range-clusters rows across the rewritten
+    * files, re-sharpening the `_stats` sidecar (harvested fresh from
+    * the new footers) so post-compaction [[readWhere]] skipping is
+    * maximal on THAT column. `zorderCols` (numeric; overrides sortCol)
+    * interleave-clusters on SEVERAL columns at once: each column is
+    * bucketed by its own approximate quantile boundaries (one
+    * approxQuantile pass — a bounded boundary array to the driver, not
+    * data), the bucket ids' bits are interleaved into a Z-value, and
+    * files are range-packed by it. A space-filling curve keeps rows
+    * close in EVERY dimension close in the file order, so a range on
+    * any single Z-column still skips most files — the property a plain
+    * sort gives only its leading column. (The publicly documented
+    * Delta/Iceberg OPTIMIZE ZORDER idea, original code.)
+    *
+    * Concurrency: if another writer re-points `table` between our read
+    * and publish, the compacted data is stale — that attempt fails
+    * loudly (caller re-runs) instead of silently dropping the race
+    * winner's rows. Races on OTHER tables merge fine: each publish
+    * attempt re-reads the current manifest.
+    */
   def compact(table: String, targetBytes: Long = 128L << 20,
               sortCol: Option[String] = None,
               statsCols: Seq[String] = Nil,

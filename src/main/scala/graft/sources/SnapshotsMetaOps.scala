@@ -535,26 +535,26 @@ private[sources] trait SnapshotsMetaOps { self: Snapshots =>
       properties = decodeChecks(m.get(table + PropsSuffix)))
   }
 
-  /** Targeted row delete — the GDPR / retention maintenance job. Rows
-    * matching ALL `ranges` (conjunctive) are removed from the table in
-    * a new published version, at a cost of O(files that might hold a
-    * matching row), not O(table):
-    *
-    *  - files whose stats CANNOT contain a match are RE-REFERENCED in
-    *    the new manifest as file-granular entries — zero bytes read or
-    *    written for them;
-    *  - only might-match files are read, anti-filtered, and rewritten
-    *    (with a fresh `_stats` sidecar over `statsCols`).
-    *
-    * Old versions still read the deleted rows (time travel); the
-    * deleted bytes are reclaimed the same way the open table formats
-    * do it — a later [[compact]] collapses the file-granular entries
-    * into a fresh directory, after which [[vacuum]] can collect the
-    * old dirs. NULL values in a ranged column never match a range and
-    * are therefore always kept. Result-idempotent: a repeat of the same
-    * delete re-examines only files whose [min,max] still SPANS the
-    * range (min/max cannot prove a hole) and rewrites them to the same
-    * rows; a repeat where stats prove no match publishes nothing.
+  /** METADATA-ONLY aggregates (Iceberg's metadata-only queries, public
+    * knowledge): answer count(*) / count(col) / min(col) / max(col)
+    * from the `_stats` sidecars alone — ZERO data files opened, zero
+    * Spark jobs; cost is O(manifest + sidecars) on the driver however
+    * many terabytes the table holds. The sidecar's `_rows` pseudo-
+    * column (harvested from the same footer read every stats publish
+    * already pays) supplies row counts; per-column null counts turn
+    * them into exact count(col). Exactness is REFUSED loudly rather
+    * than approximated: any file missing from its sidecar, any
+    * requested column missing stats, or any unset footer null count
+    * (nulls = −1) throws — stats are an accelerator that must never
+    * silently change an answer. Caveats inherited from parquet
+    * footers: string min/max are exact only when the writer did not
+    * truncate them (Spark leaves short strings untruncated), and
+    * double NaN handling follows the footer contract — both fine for
+    * the key's integer/short-string columns. Returns (total rows,
+    * col -> (nonnull count, min, max)); min/max are None for all-null
+    * columns. Merge-on-read tables answer count(*) exactly (footer
+    * rows minus tombstoned positions, O(DV) extra); per-column
+    * questions on them are refused until compact materializes.
     */
   def aggStats(table: String, cols: Seq[String], version: Option[Long] = None)
       : (Long, Map[String, (Long, Option[Any], Option[Any])]) = {
@@ -1053,21 +1053,4 @@ private[sources] trait SnapshotsMetaOps { self: Snapshots =>
     read(table, Some(versionAsOf(tsMillis).getOrElse(
       throw new NoSuchElementException(
         s"no version committed at or before $tsMillis under $root"))))
-
-  /** MERGE-ON-READ delete (deletion vectors — the Delta/Iceberg v2
-    * fast-delete path): rows matching ALL `ranges` are tombstoned by
-    * POSITION (file_name, row_index) in a `@dv` sidecar table instead
-    * of rewriting any data file. Cost: read only might-match files
-    * (same stats classification as [[deleteWhere]]), write O(matched
-    * rows) of positions, publish one manifest — at 100 TB a
-    * single-row GDPR delete costs kilobytes instead of re-writing a
-    * gigabyte file. Every read applies the vector transparently;
-    * [[compact]] later materializes it (copy-on-write) and drops the
-    * line. Result-idempotent: a repeat whose tombstones are already
-    * all present publishes nothing. The vector merges with any
-    * existing one, so MoR deletes stack. Positions key on file_name —
-    * verified UNIQUE across the table's files before publishing (every
-    * write path produces uuid'd part names; the check makes the
-    * assumption loud, not silent).
-    */
 }

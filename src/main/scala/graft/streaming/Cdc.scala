@@ -106,19 +106,25 @@ object Cdc {
         coalesce(col("e.after.o_orderkey"), col("e.before.o_orderkey")).as("o_orderkey"),
         col("e.after.o_totalprice").as("o_totalprice"))
 
+  /** Each key's latest change, deletes included: newest `ts_ms` first,
+    * then the smallest `op`. The op tiebreak is deterministic on
+    * purpose — a replayed batch can put the surviving state row and
+    * its identical change row at the same ts, and the winner must not
+    * depend on shuffle order.
+    */
+  private[streaming] def latestPerKey(changes: DataFrame): DataFrame = {
+    val w = Window.partitionBy("o_orderkey").orderBy(col("ts_ms").desc, col("op"))
+    changes.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
   /** Latest-wins merge: keep each key's most recent op; deletes remove
     * the key from current state. With `keepTs` the surviving row keeps
     * its change timestamp so state can re-enter a later merge
     * (incremental application — see [[applyIncrement]]).
     */
   def applyChanges(changes: DataFrame, keepTs: Boolean = false): DataFrame = {
-    // op as a deterministic tiebreak: a replayed batch can put the
-    // surviving state row and its identical change row at the same ts,
-    // and the winner must not depend on shuffle order
-    val w = Window.partitionBy("o_orderkey").orderBy(col("ts_ms").desc, col("op"))
-    val current = changes
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("op") =!= "d")
+    val current = latestPerKey(changes).filter(col("op") =!= "d")
     if (keepTs)
       current.select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"),
         col("op").as("last_op"), col("ts_ms"))

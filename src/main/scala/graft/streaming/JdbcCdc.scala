@@ -12,7 +12,8 @@ import graft.sources.Jdbc
   *
   *   [[Jdbc.readQuery]] (only rows past the watermark cross the wire)
   *     → decoded change batch
-  *     → [[LakeMerge.mergeBatch]] (bucket-pruned upsert, idempotent)
+  *     → [[LakeMerge.mergeBatch]] (stats-pruned upsert into the lake's
+  *       `state` table, replay-idempotent)
   *
   * The watermark (max change ts applied so far) is the resume token:
   * polling is at-least-once, and because the merge is replay-idempotent

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Snapshots
+import graft.sources.Snapshots.{MatchedDelete, MatchedUpdate, NotMatchedInsert, srcCol}
 
 /** CDC MERGE into the lake — the analog of the reference's
   * `execute`/`execute_` write path (reference: Stream.hs:122-145):
@@ -12,209 +13,94 @@ import graft.sources.Snapshots
   * table state as an upsert. This is the operator a CDC consumer
   * actually runs after [[Cdc.applyIncrement]] computes the new state.
   *
-  * Layout + scale contract (100 TB): state is hash-bucket-partitioned
-  * parquet (`pk_bucket = pmod(hash(key), NBuckets)` — murmur3, the same
-  * hash family bucketBy uses). A merge then touches ONLY the buckets
-  * the change batch hashes into:
+  * Layout: the state lake is ONE ordinary lake table, `state`
+  * (o_orderkey, price, last_op, ts_ms), with sidecar stats on the key
+  * and range-clustered on it (the `clusterBy` contract). A merge is one
+  * [[Snapshots.mergeClauses]] call, so it runs the stats-pruned
+  * partial rewrite every DML verb runs: the batch's key span bounds
+  * the touched files, every other file is re-referenced untouched, and
+  * a merge sized to more than one output file writes them range-
+  * clustered, so the state stays key-disjoint merge after merge. The
+  * span, not the key set, bounds the rewrite: a sparse batch whose keys
+  * lie far apart rewrites every file between them. Visibility is ONE
+  * atomic manifest commit — a reader resolves old or new state, never
+  * a mix. This is the lake analog of the reference running `execute`
+  * INSIDE `withTransaction` (reference: Stream.hs:122-145 inside
+  * Stream.hs:166-231). A merge that dies before its manifest lands
+  * leaves only unreferenced staged files (vacuum's orphan sweep), and
+  * the next merge starts from the last committed manifest.
   *
-  *  1. the read side resolves the head manifest ONCE and scans only the
-  *     touched buckets' directories — zero IO (and zero listing) for
-  *     the rest of the table;
-  *  2. the write side stages merged data for only those buckets under
-  *     an unpublished version directory, so merge data cost is
-  *     O(touched state + batch), not O(table);
-  *  3. visibility is ATOMIC: the staged buckets become the table by one
-  *     [[Snapshots.commitStaged]] manifest publish (create-exclusive) —
-  *     a reader resolves old-or-new state, never a mix. This is the
-  *     lake analog of the reference running `execute` INSIDE
-  *     `withTransaction` (reference: Stream.hs:122-145 inside
-  *     Stream.hs:166-231): an upsert is all-or-nothing to readers.
-  *     Buckets whose rows are all deleted by the batch simply drop out
-  *     of the manifest in the same publish.
-  *
-  * Crash safety falls out of the same protocol: a merge that dies after
-  * staging but before publishing leaves an invisible version directory
-  * (collected by [[Snapshots.vacuum]]'s age-guarded orphan sweep), and
-  * the next merge starts from the last PUBLISHED manifest — never from
-  * a half-written directory tree.
-  *
-  * Exactly-once under replay: the merge is deterministic and
-  * idempotent — latest-wins by (ts, op) over state ∪ batch — so a
-  * foreachBatch retry of an already-applied batch republishes the same
-  * state (StreamingSpec proves state is unchanged under double-apply
-  * and drives the whole path through a checkpointed stream).
-  *
-  * Writer concurrency: manifest publishes race safely (optimistic
-  * create-exclusive), but the stage directory is named by head+1, so
-  * the intended deployment is ONE merge writer per lake — exactly what
-  * a checkpointed foreachBatch CDC consumer is. Maintenance jobs
-  * (compaction on other tables, vacuum with a retention age) can run
-  * alongside.
+  * Exactly-once under replay: the merge is latest-wins by (ts, op) over
+  * state ∪ batch — exactly [[Cdc.applyIncrement]] — so a foreachBatch
+  * retry of an already-applied batch reproduces the same state. The ts
+  * guard on the MATCHED arms carries latest-wins ACROSS batches: a
+  * change older than the stored row (a late re-delivery) loses to it,
+  * where a plain upsert would overwrite it. StreamingSpec pins the fold
+  * of merges against the fold of Cdc.applyIncrement.
   */
 object LakeMerge {
 
-  /** More buckets than Bucketing.NBuckets: merge granularity wants
-    * finer partitions (less rewrite per batch); 32 here stands in for
-    * the O(thousands) a 100 TB table would use.
-    */
-  val NBuckets = 32
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("pk_bucket", pmod(hash(col("o_orderkey")), lit(NBuckets)))
-
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  // manifest TABLE name for a bucket ('=' is the manifest separator, so
-  // the key differs from the pk_bucket=N directory name on purpose)
-  private def bucketKey(b: Int) = s"b$b"
-
-  /** Stage `state` bucket-partitioned under the NEXT (unpublished)
-    * version directory and return manifest entries for the bucket dirs
-    * the write produced (a bucket with no rows produces no dir). One
-    * task per bucket → one file per bucket dir, not (tasks × buckets)
-    * small files. Nothing is visible until the entries are published.
-    */
-  private def stageBuckets(s: SparkSession, path: String, head: Option[Long],
-                           state: DataFrame): Map[String, String] = {
-    val stageVer = head.getOrElse(0L) + 1
-    val dir = s"$path/v$stageVer"
-    val f = fs(s, path)
-    // delete-then-write: a crashed PRIOR attempt may have left bucket
-    // dirs under this same unpublished version path. Under dynamic
-    // partition overwrite only the batch's own buckets are rewritten,
-    // so the fs.exists scan below would resurrect the dead attempt's
-    // stale buckets into the published manifest.
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    withBucket(state)
-      .repartition(col("pk_bucket"))
-      .write.mode("overwrite").partitionBy("pk_bucket").parquet(dir)
-    (0 until NBuckets).flatMap { b =>
-      if (f.exists(new org.apache.hadoop.fs.Path(s"$dir/pk_bucket=$b")))
-        Some(bucketKey(b) -> s"v$stageVer/pk_bucket=$b")
-      else None
-    }.toMap
-  }
+  /** The state lake's one table. */
+  val Table = "state"
+  private val Key = "o_orderkey"
 
   /** Seed (REPLACE) the state lake at `path` from a full-state DataFrame
-    * (schema: o_orderkey, price, last_op, ts_ms): stage every bucket,
-    * publish one manifest. Buckets the new state doesn't populate drop
-    * out of the manifest in the same publish.
+    * (schema: o_orderkey, price, last_op, ts_ms) in one atomic table
+    * (re)definition.
     */
-  def seed(s: SparkSession, path: String, state: DataFrame): Unit = {
-    val snap = new Snapshots(s, path)
-    val updates = stageBuckets(s, path, snap.currentVersion, state)
-    snap.commitStaged(updates,
-      removes = (0 until NBuckets).map(bucketKey).toSet -- updates.keySet,
-      schemas = updates.keys.map(_ -> state.schema).toMap)
+  def seed(s: SparkSession, path: String, state: DataFrame): Unit =
+    seed(new Snapshots(s, path), state)
+
+  private def seed(snap: Snapshots, state: DataFrame): Unit = {
+    snap.replaceTable(Table, state, statsCols = Seq(Key), props = Map("clusterBy" -> Key))
+    ()
   }
-
-  /** A merge with its data staged (written, invisible) but not yet
-    * published — the two-phase seam that makes atomicity testable: a
-    * reader between [[stageMerge]] and [[publish]] must see the OLD
-    * state exactly (StreamingSpec proves it does). `schema` is the
-    * staged buckets' file schema, handed to the publish so the manifest
-    * checkpoints it without a footer read.
-    */
-  final case class StagedMerge(snap: Snapshots,
-                               updates: Map[String, String],
-                               removes: Set[String],
-                               schema: org.apache.spark.sql.types.StructType)
-
-  def publish(m: StagedMerge): Long =
-    m.snap.commitStaged(m.updates, m.removes,
-      schemas = m.updates.keys.map(_ -> m.schema).toMap)
 
   /** MERGE a decoded change batch (schema: op, ts_ms, o_orderkey,
     * o_totalprice) into the state lake at `path`. Upsert semantics:
-    * latest-wins per key; 'd' ops remove the key. Only touched buckets
-    * are read or staged, and visibility is one atomic manifest publish
-    * (see the class doc's transaction analogy).
+    * latest-wins per key by (ts, op); 'd' ops remove the key. A lake
+    * with no state table yet is seeded from the batch's own
+    * latest-wins state in one commit.
     */
   def mergeBatch(s: SparkSession, path: String, changes: DataFrame): Unit =
-    stageMerge(s, path, changes).foreach(publish)
+    mergeBatch(new Snapshots(s, path), changes)
 
-  /** The staging half of [[mergeBatch]]: read ONLY the touched buckets'
-    * current state (one manifest resolve — a consistent snapshot), merge
-    * the batch in, write merged buckets under the next version dir.
-    * Returns None for an empty batch. `path` is never both a lineage
-    * source and a write target of the same job (the stage dir is fresh),
-    * so a lost cache block / task retry can never recompute against
-    * partially-overwritten state.
-    *
-    * Bootstrap: a lake with no published manifest (first merge, or a
-    * predecessor crashed after staging but before publishing) starts
-    * from empty state with the batch's schema — never from a
-    * half-written directory tree.
-    */
-  def stageMerge(s: SparkSession, path: String, changes: DataFrame): Option[StagedMerge] = {
-    // the batch feeds TWO jobs (the touched-bucket probe and the merge
-    // itself); without pinning it, its lineage — typically a JSON
-    // envelope decode — recomputes per job. A micro-batch is bounded by
-    // construction (a foreachBatch batch or a poll window), so caching
-    // it is batch-sized state, released before returning.
-    val ch = withBucket(changes).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      stageMergePinned(s, path, ch)
-    } finally {
-      ch.unpersist(blocking = false)
+  private[graft] def mergeBatch(snap: Snapshots, changes: DataFrame): Unit =
+    if (!snap.hasTable(Table)) seed(snap, Cdc.applyChanges(changes, keepTs = true))
+    else {
+      // the merge source: each key's latest change, deletes KEPT (they
+      // are what removes a key). It feeds the span job, the uniqueness
+      // guard and the rewrite; pinning it keeps its lineage (typically
+      // an envelope decode) from running three times. A micro-batch is
+      // bounded by construction, and the pin is released before return.
+      val src = Cdc.latestPerKey(changes)
+        .select(col(Key), round(col("o_totalprice"), 2).as("price"), col("op"), col("ts_ms"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // the batch row wins iff Cdc.applyIncrement would pick it over
+        // the stored row: newer ts, or equal ts and op not after last_op
+        val newer = srcCol("ts_ms") > col("ts_ms") ||
+          (srcCol("ts_ms") === col("ts_ms") && srcCol("op") <= col("last_op"))
+        val set = Map("price" -> srcCol("price"), "last_op" -> srcCol("op"),
+          "ts_ms" -> srcCol("ts_ms"))
+        snap.mergeClauses(Table, src, Seq(Key),
+          matched = Seq(MatchedDelete(Some(newer && srcCol("op") === "d")),
+            MatchedUpdate(Some(newer), set)),
+          notMatched = Seq(NotMatchedInsert(Some(srcCol("op") =!= "d"), set + (Key -> srcCol(Key)))),
+          bySource = Nil, statsCols = Seq(Key))
+      } finally { src.unpersist(blocking = false); () }
     }
-  }
 
-  private def stageMergePinned(s: SparkSession, path: String, ch: DataFrame): Option[StagedMerge] = {
-    // ≤ NBuckets small ints — a bounded O(1) driver payload, same class
-    // as collecting AQE stats; NOT a data collect
-    val touched = ch.select("pk_bucket").distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return None
-    val snap = new Snapshots(s, path)
-    val head = snap.currentVersion
-    val touchedKeys = touched.map(bucketKey)
-    val anyCommitted = head.isDefined &&
-      snap.tablePaths().keySet.exists(touchedKeys.contains)
-    val current =
-      if (!anyCommitted) Cdc.applyChanges(ch.drop("pk_bucket").limit(0), keepTs = true)
-      // metadata-planned read of ONLY the touched buckets (absent
-      // buckets skipped — an untouched-by-history bucket has no entry)
-      else snap.readTables(touchedKeys)
-    // merged rows hash back into touched buckets by construction, so the
-    // stage writes exactly the touched dirs; a touched bucket whose rows
-    // were ALL deleted produces no dir → removed from the manifest
-    // (the projection over the pinned batch still reads the cache)
-    val merged = Cdc.applyIncrement(current, ch.drop("pk_bucket"))
-    val updates = stageBuckets(s, path, head, merged)
-    Some(StagedMerge(snap, updates, touchedKeys.toSet -- updates.keySet, merged.schema))
-  }
-
-  /** The merge's read side: state restricted to touched buckets. The
-    * head manifest is resolved once and ONLY the touched bucket dirs are
-    * handed to the scan — pruning happens at the manifest, before Spark
-    * lists a single untouched directory (StreamingSpec machine-asserts
-    * every input file is under a touched bucket — the claim that merge
-    * IO is O(touched), not O(table)).
-    */
-  def prunedState(s: SparkSession, path: String, touched: Seq[Int]): DataFrame =
-    new Snapshots(s, path).readTables(touched.map(bucketKey))
-
-  /** Current state read back: one manifest resolve → one multi-dir scan
-    * (bucket dirs carry no partition column — the bucket id is derivable
-    * from the key). Consistent by construction: the version is pinned
-    * before the first byte is read.
-    */
-  def readState(s: SparkSession, path: String): DataFrame = {
-    val snap = new Snapshots(s, path)
-    val names = snap.tablePaths().keys.toSeq.sorted
-    require(names.nonEmpty, s"empty or uncommitted state lake at $path")
-    snap.readTables(names)
-  }
+  /** Current state read back: one manifest resolve, one scan. */
+  def readState(s: SparkSession, path: String): DataFrame =
+    new Snapshots(s, path).read(Table)
 
   /** State lake seeded from the snapshot ('r') rows, staged ONCE per sf
     * dir (idempotent, marker-gated — the [[Cdc.stagedEnvelopes]]
     * pattern). Seeding is test-fixture construction, not merge work: a
     * real consumer merges into a lake that already exists, so c03 must
     * time mergeBatch+readState, not a per-run re-seed of full table
-    * state (round 3's driver bench spent ~43s/run re-seeding 32 bucket
-    * dirs three times over).
+    * state.
     */
   def stagedLake(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -222,7 +108,7 @@ object LakeMerge {
     // the generation tag carries the LAYOUT: a persistent warehouse can
     // hold a lake staged by an older build (different on-disk protocol),
     // whose marker must not be trusted; bump it whenever layout changes
-    graft.StagedFixture.ensure(s, path, "SEEDED_G3") {
+    graft.StagedFixture.ensure(s, path, "SEEDED_G4") {
       val decoded = Cdc.decode(Cdc.stagedEnvelopes(s, dir))
       seed(s, path, Cdc.applyChanges(decoded.where(col("op") === "r"), keepTs = true))
     }

@@ -9,10 +9,10 @@ import graft.sources.{ChangeFeed, FileStats, Snapshots}
   * the reference's north-star loop (README.md:10-14: stream changes
   * out of the primary store into a compute store) with the LAKE as
   * both ends: the change-feed source (D12) streams per-version diffs,
-  * and each micro-batch lands in the replica through the span-pruned
-  * DML verbs ([[Snapshots.mergeInto]] for live rows,
-  * [[Snapshots.deleteKeys]] for dead ones) — per batch O(touched
-  * files + batch), never O(table), on both the read and write side.
+  * and each micro-batch lands in the replica through ONE span-pruned
+  * [[Snapshots.applyChanges]] (live rows upserted, dead keys deleted,
+  * one published version) — per batch O(touched files + batch),
+  * never O(table), on both the read and write side.
   *
   * Per-key resolution: within a micro-batch (which may span several
   * source versions) the LAST version touching a key decides its fate —
@@ -23,7 +23,7 @@ import graft.sources.{ChangeFeed, FileStats, Snapshots}
   * into value-identical upserts, and the maintenance flag (`@maint`)
   * keeps pure compactions out of the feed entirely.
   *
-  * Exactly-once: both verbs are idempotent at the row level (an upsert
+  * Exactly-once: the verb is idempotent at the row level (an upsert
   * of identical rows and a delete of absent keys both converge), so a
   * replayed micro-batch after a checkpoint restart re-lands harmlessly
   * — no batch-id ledger needed, the convergence IS the guarantee.
@@ -37,7 +37,7 @@ object Replicate {
     applyBatchKeys(dst, table, Seq(keyCol), statsCols)(batch, batchId)
 
   /** Composite-key form: per-key resolution and the replica's
-    * mergeInto/deleteKeys all match on every component. */
+    * applyChanges match on every component. */
   def applyBatchKeys(dst: Snapshots, table: String, keyCols: Seq[String],
                      statsCols: Seq[String] = Nil)
                     (batch: DataFrame, batchId: Long): Unit = {
@@ -127,7 +127,7 @@ object Replicate {
     * `startingVersion = 1` — so the key times what a standing replica
     * PAYS: the incremental legs (range delete, range update, a skipped
     * compaction, append), one source version per micro-batch, through
-    * mergeInto + deleteKeys. key_sum pins row-level key presence,
+    * applyChanges. key_sum pins row-level key presence,
     * total_cents pins that the update's +7 and the append's +1 landed
     * on exactly the right rows — a missed delete, double-applied
     * batch, or compaction-churn re-delivery flips the hash against

@@ -203,12 +203,11 @@ class JdbcSpec extends AnyFunSuite {
     assert(state.where("o_orderkey = 3").head().getAs[Double]("price") == 999.0)
     assert(state.where("o_orderkey = 4").count() == 0)
 
-    // the removal is VISIBLE as change data: readChanges on the deleted
-    // key's bucket shows its pre-image removed and never re-added —
-    // c08's diff surface composing with the JDBC loop end-to-end
-    val bucket = spark.range(1)
-      .select(pmod(hash(lit(4L)), lit(LakeMerge.NBuckets))).head().getInt(0)
-    val diff = snap.readChanges(s"b$bucket", vBefore, snap.currentVersion.get)
+    // the removal is VISIBLE as change data: readChanges on the state
+    // table shows the deleted key's pre-image removed and never
+    // re-added — c08's diff surface composing with the JDBC loop
+    // end-to-end
+    val diff = snap.readChanges(LakeMerge.Table, vBefore, snap.currentVersion.get)
     val removed4 = diff.where(col("_change") === "removed" && col("o_orderkey") === 4L)
     val added4 = diff.where(col("_change") === "added" && col("o_orderkey") === 4L)
     assert(removed4.count() == 1, "deleted key's pre-image must surface as removed")

@@ -979,7 +979,7 @@ class StreamingSpec extends AnyFunSuite {
     incremental.zip(oneShot).foreach { case (a, b) => assert(a == b) }
   }
 
-  test("lake MERGE: streamed upsert equals one-shot apply, replay is idempotent, untouched buckets untouched") {
+  test("lake MERGE: streamed upsert equals one-shot apply, replay is idempotent, untouched files untouched") {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import graft.streaming.{Cdc, LakeMerge}
@@ -989,77 +989,88 @@ class StreamingSpec extends AnyFunSuite {
     val path = Files.createTempDirectory("merge_state").toString + "/state"
     val decoded = Cdc.decode(Cdc.syntheticEnvelopes(spark, TestSpark.sfTest))
     LakeMerge.seed(spark, path, Cdc.applyChanges(decoded.where(col("op") === "r"), keepTs = true))
-
-    // stream the u/d envelopes through a checkpointed foreachBatch in
-    // two micro-batches (updates, then deletes)
-    val updates = Cdc.syntheticEnvelopes(spark, TestSpark.sfTest)
-      .where(get_json_object(col("envelope"), "$.op") === "u")
-      .as[String].collect()
-    val deletes = Cdc.syntheticEnvelopes(spark, TestSpark.sfTest)
-      .where(get_json_object(col("envelope"), "$.op") === "d")
-      .as[String].collect()
-    val input = MemoryStream[String]
-    val ckpt = Files.createTempDirectory("merge_ckpt").toString
-    val q = input.toDS().toDF("envelope").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        LakeMerge.mergeBatch(spark, path, Cdc.decode(batch))
-      }
-      .start()
-    try {
-      input.addData(updates.toSeq); q.processAllAvailable()
-      input.addData(deletes.toSeq); q.processAllAvailable()
-    } finally q.stop()
-
-    def state() = LakeMerge.readState(spark, path)
-      .select("o_orderkey", "price", "last_op").orderBy("o_orderkey").collect()
-    val merged = state()
-    val oneShot = Cdc.c01CdcApply(spark, TestSpark.sfTest).collect()
-    assert(merged.length == oneShot.length, s"${merged.length} vs ${oneShot.length}")
-    merged.zip(oneShot).foreach { case (a, b) => assert(a == b) }
-
-    // replay: re-apply the delete batch directly (a foreachBatch retry
-    // delivers the same batch again) — state must be byte-identical
-    LakeMerge.mergeBatch(spark, path, Cdc.decode(deletes.toSeq.toDF("envelope")))
-    val replayed = state()
-    assert(replayed.length == merged.length, "replay changed row count")
-    replayed.zip(merged).foreach { case (a, b) => assert(a == b) }
-
-    // touched-bucket isolation: a single-key update must leave every
-    // other bucket's DATA files physically untouched (manifest/_SUCCESS
-    // metadata is the publish mechanism, not bucket data)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(): Map[String, Long] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(path), true)
-      val m = scala.collection.mutable.Map.empty[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        val p = f.getPath
-        if (!p.getName.startsWith("_") && !p.toString.contains("/_commits/"))
-          m(p.toString) = f.getModificationTime
-      }
-      m.toMap
-    }
-    // the merge's read side resolves the manifest and scans ONLY the
-    // touched buckets' dirs — merge IO is O(touched), not O(table)
-    val prunedFiles = LakeMerge.prunedState(spark, path, Seq(0, 1)).inputFiles
-    assert(prunedFiles.nonEmpty &&
-      prunedFiles.forall(f => f.contains("pk_bucket=0") || f.contains("pk_bucket=1")),
-      "state read must scan only touched bucket dirs: " + prunedFiles.mkString(", "))
+    // the merges below run at a target file size of 1/8 of the seeded
+    // state, so the state they leave spans several files — the layout
+    // a table many times the default 128 MB target has
+    val seededBytes = LakeMerge.readState(spark, path).inputFiles
+      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+    val targetKey = "spark.graft.write.targetFileBytes"
+    spark.conf.set(targetKey, (seededBytes / 8).max(1L).toString)
+    try {
+      // stream the u/d envelopes through a checkpointed foreachBatch in
+      // two micro-batches (updates, then deletes)
+      val updates = Cdc.syntheticEnvelopes(spark, TestSpark.sfTest)
+        .where(get_json_object(col("envelope"), "$.op") === "u")
+        .as[String].collect()
+      val deletes = Cdc.syntheticEnvelopes(spark, TestSpark.sfTest)
+        .where(get_json_object(col("envelope"), "$.op") === "d")
+        .as[String].collect()
+      val input = MemoryStream[String]
+      val ckpt = Files.createTempDirectory("merge_ckpt").toString
+      val q = input.toDS().toDF("envelope").writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          LakeMerge.mergeBatch(spark, path, Cdc.decode(batch))
+        }
+        .start()
+      try {
+        input.addData(updates.toSeq); q.processAllAvailable()
+        input.addData(deletes.toSeq); q.processAllAvailable()
+      } finally q.stop()
 
-    val before = listing()
-    val oneKey = decoded.where(col("op") === "u").limit(1)
-      .withColumn("ts_ms", col("ts_ms") + 5) // a genuinely newer change
-    val touchedBucket = oneKey
-      .select(pmod(hash(col("o_orderkey")), lit(LakeMerge.NBuckets))).head().getInt(0)
-    LakeMerge.mergeBatch(spark, path, oneKey)
-    val after = listing()
-    val changed = (after.keySet ++ before.keySet)
-      .filter(k => before.get(k) != after.get(k))
-    assert(changed.nonEmpty, "the touched bucket must be rewritten")
-    assert(changed.forall(_.contains(s"pk_bucket=$touchedBucket")),
-      s"files outside bucket $touchedBucket changed: $changed")
+      def state() = LakeMerge.readState(spark, path)
+        .select("o_orderkey", "price", "last_op").orderBy("o_orderkey").collect()
+      val merged = state()
+      val oneShot = Cdc.c01CdcApply(spark, TestSpark.sfTest).collect()
+      assert(merged.length == oneShot.length, s"${merged.length} vs ${oneShot.length}")
+      merged.zip(oneShot).foreach { case (a, b) => assert(a == b) }
+
+      // replay: re-apply the delete batch directly (a foreachBatch retry
+      // delivers the same batch again) — state must be byte-identical
+      LakeMerge.mergeBatch(spark, path, Cdc.decode(deletes.toSeq.toDF("envelope")))
+      val replayed = state()
+      assert(replayed.length == merged.length, "replay changed row count")
+      replayed.zip(merged).foreach { case (a, b) => assert(a == b) }
+
+      // file-level isolation on the layout the merges left: the state
+      // spans several key-disjoint files, so a single-key change rewrites
+      // exactly the one file whose stats span the key; every other data
+      // file stays referenced and byte-identical
+      def digest(f: String): String = {
+        val in = fs.open(new org.apache.hadoop.fs.Path(f))
+        try java.security.MessageDigest.getInstance("MD5")
+          .digest(in.readAllBytes()).map("%02x".format(_)).mkString
+        finally in.close()
+      }
+      val filesBefore = LakeMerge.readState(spark, path).inputFiles.toSeq
+      assert(filesBefore.size >= 4, s"merged state must span several files: $filesBefore")
+      val spans = filesBefore.map { f =>
+        val r = spark.read.parquet(f).agg(min("o_orderkey"), max("o_orderkey")).head()
+        f -> (r.getLong(0), r.getLong(1))
+      }.toMap
+      val ordered = spans.values.toSeq.sorted
+      assert(ordered.zip(ordered.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+        s"merged files must be key-disjoint: $ordered")
+      val digests = filesBefore.map(f => f -> digest(f)).toMap
+      // a live key (%11 keys were deleted above), updated genuinely newer
+      val oneKey = decoded.where(col("op") === "u" && col("o_orderkey") % 11 =!= 0)
+        .orderBy("o_orderkey").limit(1)
+        .withColumn("ts_ms", col("ts_ms") + 5)
+      val key = oneKey.head().getAs[Long]("o_orderkey")
+      val (spanning, others) = filesBefore.partition { f =>
+        val (lo, hi) = spans(f); lo <= key && key <= hi }
+      assert(spanning.size == 1, s"exactly one file spans key $key: $spanning")
+      LakeMerge.mergeBatch(spark, path, oneKey)
+      val filesAfter = LakeMerge.readState(spark, path).inputFiles.toSet
+      assert(!filesAfter.contains(spanning.head),
+        s"the file spanning key $key must be rewritten: ${spanning.head}")
+      others.foreach { f =>
+        assert(filesAfter.contains(f), s"$f does not span key $key yet left the table")
+        assert(digest(f) == digests(f), s"$f does not span key $key yet changed")
+      }
+    } finally spark.conf.unset(targetKey)
   }
 
   test("lake MERGE publishes atomically: a mid-merge reader sees old state exactly, never a mix") {
@@ -1075,24 +1086,57 @@ class StreamingSpec extends AnyFunSuite {
       .select("o_orderkey", "price", "last_op").orderBy("o_orderkey").collect()
     val oldState = state()
 
-    // phase 1: stage the merge — all data written, nothing published.
-    // This is exactly the window where the old per-bucket-rename swap
-    // could expose half-old/half-new state to a planning reader.
-    val staged = LakeMerge.stageMerge(spark, path,
-      decoded.where(col("op") =!= "r"))
-    assert(staged.nonEmpty, "batch must touch at least one bucket")
-    val midMerge = state()
-    assert(midMerge.length == oldState.length,
+    // the publish seam: every row of the merge is written, nothing is
+    // published yet — a reader in this window must see the OLD state
+    val snap = new graft.sources.Snapshots(spark, path)
+    var midMerge: Option[Array[org.apache.spark.sql.Row]] = None
+    snap.beforePublish = (_, _) => midMerge = Some(state())
+    LakeMerge.mergeBatch(snap, decoded.where(col("op") =!= "r"))
+    assert(midMerge.nonEmpty, "the merge must pass the publish seam")
+    assert(midMerge.get.length == oldState.length,
       "a reader before publish must resolve the OLD version")
-    midMerge.zip(oldState).foreach { case (a, b) => assert(a == b) }
+    midMerge.get.zip(oldState).foreach { case (a, b) => assert(a == b) }
 
-    // phase 2: one manifest publish flips every bucket at once
-    LakeMerge.publish(staged.get)
+    // the one manifest publish flips the whole state at once
     val newState = state()
     val oneShot = Cdc.c01CdcApply(spark, TestSpark.sfTest).collect()
     assert(newState.length == oneShot.length,
       s"${newState.length} vs ${oneShot.length}")
     newState.zip(oneShot).foreach { case (a, b) => assert(a == b) }
+  }
+
+  test("lake MERGE folds like Cdc.applyIncrement: late, tied, stale-delete and replayed changes") {
+    import java.nio.file.Files
+    import graft.streaming.{Cdc, LakeMerge}
+    val sp = spark
+    import sp.implicits._
+    def batch(rows: (String, Long, Long, Option[Double])*) =
+      rows.toDF("op", "ts_ms", "o_orderkey", "o_totalprice")
+    val snapshot = batch((1L to 6L).map(k => ("r", 10L, k, Some(k * 100.0))): _*)
+    val changes = batch(
+      ("u", 20L, 1L, Some(110.0)),                           // newer update
+      ("d", 5L, 2L, None),                                   // delete older than the state row
+      ("u", 30L, 3L, Some(330.0)), ("d", 30L, 3L, None),     // same-ts d/u tie in one batch
+      ("u", 10L, 5L, Some(555.0)),                           // same-ts tie with the state row
+      ("d", 10L, 6L, None),                                  // same-ts delete of the state row
+      ("u", 15L, 7L, Some(700.0)), ("u", 25L, 7L, Some(777.0)), // new key, latest wins
+      ("d", 40L, 8L, None))                                  // delete of an absent key
+    val late = batch(
+      ("u", 15L, 1L, Some(150.0)),                           // older than the applied u@20
+      ("r", 35L, 3L, Some(333.0)),                           // re-insert after the delete
+      ("u", 12L, 4L, Some(444.0)))
+    // the replays re-deliver exactly what was already applied
+    val seq = Seq(snapshot, changes, late, changes, late)
+
+    val path = Files.createTempDirectory("merge_fold").toString + "/state"
+    var expected = Cdc.applyChanges(snapshot.limit(0), keepTs = true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_orderkey", "price", "last_op", "ts_ms").orderBy("o_orderkey").collect().toSeq
+    seq.zipWithIndex.foreach { case (b, i) =>
+      LakeMerge.mergeBatch(spark, path, b)
+      expected = Cdc.applyIncrement(expected, b)
+      assert(rows(LakeMerge.readState(spark, path)) == rows(expected), s"after batch $i")
+    }
   }
 
   test("stream-static dimension join matches its batch twin") {

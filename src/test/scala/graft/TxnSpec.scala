@@ -4530,6 +4530,14 @@ class TxnSpec extends AnyFunSuite {
       if dfWriter.findFirstIn(l).isDefined && !l.contains("format(\"jdbc\")")
     } yield s"${f.getName}:${i + 1}: ${l.trim}"
     assert(writes.isEmpty, "data writes outside Snapshots.writeFiles:\n" + writes.mkString("\n"))
+    // the streaming upsert runs on the DML verbs: no private write or publish
+    val upserts = for {
+      name <- Seq("LakeMerge.scala", "JdbcCdc.scala")
+      f = new java.io.File("src/main/scala/graft/streaming", name)
+      (l, i) <- { assert(f.isFile, s"${f.getAbsolutePath} not found"); code(f) }
+      if dfWriter.findFirstIn(l).isDefined || l.contains("commitStaged(")
+    } yield s"$name:${i + 1}: ${l.trim}"
+    assert(upserts.isEmpty, "streaming upsert writes or publishes on its own:\n" + upserts.mkString("\n"))
     val opens = for {
       f <- files.toSeq if f.getName != "PartFiles.scala"; (l, i) <- code(f)
       if l.contains("GraftParquetWriteShim.open")
